@@ -275,7 +275,10 @@ object Bench {
       if (used + s.length + 1 <= budget) { shown += s; used += s.length + 1 }
     }
     val qsTop = shown.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$load,"n_entries":${results.size - setups.size},"n_setups":${setups.size},"n_failed":${failed.size},"queries":$qsTop,"queries_omitted":${results.size - shown.size},"queries_full":"graft_bench_last.json","sf":"$sfDir"}""")
+    // One full per-query file per core count, so the 8-core run does not
+    // overwrite the 32-core record.
+    val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"graft_bench_last_c$cpus.json")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$load,"n_entries":${results.size - setups.size},"n_setups":${setups.size},"n_failed":${failed.size},"queries":$qsTop,"queries_omitted":${results.size - shown.size},"queries_full":"$fullOut","sf":"$sfDir"}""")
     // Also persist the full line to a FILE: the driver's stdout-tail
     // capture has truncated the per-query map before (r7's artifact has
     // "parsed": null with the map recoverable only from raw tail text) —
@@ -286,8 +289,7 @@ object Bench {
     // other and a pre-planted symlink would redirect the write
     // (Files.writeString follows symlinks). Env override unchanged.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "graft_bench_last.json")),
+      java.nio.file.Paths.get(fullOut),
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$load,"n_entries":${results.size - setups.size},"n_setups":${setups.size},"n_failed":${failed.size},"queries":$qs,"queries_cold":$qsCold,"sf":"$sfDir"}""" + "\n")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] sidecar write failed: $e")

@@ -1,7 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StringType
 
 /** Executes a parsed [[Query]] against a DataFrame by handing a declarative
   * plan to Catalyst: `df.filter(pred).select(cols)`.
@@ -19,8 +22,17 @@ import org.apache.spark.sql.functions.{col, lit}
   *
   * Comparison semantics: the literal is cast to the column's data type and
   * compared with Spark semantics — numeric on Long columns, lexicographic
-  * on String columns. A literal that does not cast (e.g. text vs a Long
-  * column) compares as null and matches nothing. We deliberately do NOT
+  * on String columns. The cast is a TRY cast evaluated once on the driver
+  * in the session time zone: a literal that does not cast (e.g. text vs a
+  * Long column) becomes null and matches nothing, instead of an ANSI
+  * runtime error. The typed value is bound as a [[ParamLiteral]], which
+  * generated code reads by reference rather than as source text, so
+  * queries that differ only in the literal share one compiled class
+  * instead of paying a Janino compile per new value (a REPL session
+  * mostly re-asks one shape with new values). It is still a `Literal`,
+  * so parquet filter pushdown and cached-batch stats pruning see it as
+  * one. A column type that a string cannot be cast to (array, struct,
+  * map) is refused with an error. We deliberately do NOT
   * reproduce the reference's mixed-type debug-string ordering or its
   * `=`-at-index-0 defects (SURVEY.md §7.4.1-2).
   *
@@ -41,17 +53,21 @@ object Executor {
     for {
       filtered <- query.filter match {
         case Some(f) =>
-          resolve(f.columnName).map { c =>
-            // try_cast: an uncastable literal (text vs a Long column)
-            // compares as null and matches nothing, instead of an ANSI
-            // runtime error — the documented cast rule above.
-            val typedLit: Column =
-              lit(f.value.render).try_cast(df.schema(c).dataType)
-            val pred = f.op match {
-              case FilterOp.Greater => col(c) > typedLit
-              case FilterOp.Equal   => col(c) === typedLit
+          resolve(f.columnName).flatMap { c =>
+            val dt = df.schema(c).dataType
+            if (!Cast.canTryCast(StringType, dt))
+              Left(s"Cannot compare column $c of type ${dt.simpleString} with a literal")
+            else {
+              val tz = df.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key)
+              val value =
+                Cast(Literal(f.value.render), dt, Some(tz), EvalMode.TRY).eval()
+              val typedLit = GraftShims.toColumn(new ParamLiteral(value, dt))
+              val pred = f.op match {
+                case FilterOp.Greater => col(c) > typedLit
+                case FilterOp.Equal   => col(c) === typedLit
+              }
+              Right(df.filter(pred))
             }
-            df.filter(pred)
           }
         case None => Right(df)
       }

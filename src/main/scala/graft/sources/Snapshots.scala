@@ -1822,7 +1822,7 @@ object Snapshots {
     */
   private def mapFingerprint(df: DataFrame): Seq[String] =
     df.select(df.columns.sorted.map(col).toIndexedSeq: _*).orderBy("pos")
-      .collect().map(_.mkString(" ")).toSeq
+      .collect().map(_.mkString("\u0000")).toSeq
 
   def commit(
       spark: SparkSession,

@@ -3,6 +3,9 @@ package graft.core
 import graft.SparkSpec
 import graft.sources.CsvSource
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import java.nio.file.Files
 
 /** The reference's 9 end-to-end execution tests ported as golden specs
@@ -12,7 +15,7 @@ import java.nio.file.Files
   * path additionally asserts input order is preserved (single small file →
   * one partition → stable order).
   */
-class ExecutorSpec extends SparkSpec {
+class ExecutorSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def loadCsv(content: String): DataFrame = {
     val dir = Files.createTempDirectory("graft-exec")
@@ -41,6 +44,17 @@ class ExecutorSpec extends SparkSpec {
       |e,3
       |f,4
       |""".stripMargin)
+
+  // Tiny parquet table with a Long and a Date column: a real file scan,
+  // so the plan shows what reaches the parquet reader.
+  private lazy val dated: DataFrame = {
+    val dir = Files.createTempDirectory("graft-exec-pq").resolve("t").toString
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  (1L, DATE'2024-01-01'), (2L, DATE'2024-01-02'), (3L, DATE'2024-01-03')
+        |  AS t(id, d)""".stripMargin).coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
 
   private def run(df: DataFrame, q: String): DataFrame =
     Executor.execute(QueryParser.parse(q).toOption.get, df).toOption.get
@@ -127,5 +141,82 @@ class ExecutorSpec extends SparkSpec {
 
   test("text literal on a Long column matches nothing (documented cast rule)") {
     assert(run(f3, "PROJECT column1 FILTER column2 = \"x\"").count() == 0)
+  }
+
+  private def wholeStageBodies(df: DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan) { case w: WholeStageCodegenExec =>
+      w.doCodeGen()._2.body
+    }
+
+  private def ids(df: DataFrame): Set[Any] = df.collect().map(_.get(0)).toSet
+
+  // Two queries that differ only in the FILTER literal, with their
+  // expected first-column sets and, for parquet, the filter the scan must
+  // still receive (the first query's).
+  private case class SameShape(
+      name: String, table: () => DataFrame, q1: String, q2: String,
+      want1: Set[Any], want2: Set[Any], pushed: Option[String] = None)
+
+  private val sameShape = Seq(
+    SameShape("= on a Long column of a cached CSV", () => f3,
+      "PROJECT column1 FILTER column2 = 3", "PROJECT column1 FILTER column2 = 4",
+      Set("c", "d", "e"), Set("f")),
+    SameShape("> on a Long column of a cached CSV", () => f3,
+      "PROJECT column1 FILTER column2 > 2", "PROJECT column1 FILTER column2 > 3",
+      Set("c", "d", "e", "f"), Set("f")),
+    SameShape("= on a Date column of a parquet table", () => dated,
+      "PROJECT id FILTER d = 2024-01-02", "PROJECT id FILTER d = 2024-01-03",
+      Set(2L), Set(3L), Some("EqualTo(d,2024-01-02)")),
+    SameShape("> on a Long column of a parquet table", () => dated,
+      "PROJECT id FILTER id > 1", "PROJECT id FILTER id > 2",
+      Set(2L, 3L), Set(3L), Some("GreaterThan(id,1)")))
+
+  for (c <- sameShape)
+    test(s"queries differing only in the literal share whole-stage code: ${c.name}") {
+      val (a, b) = (run(c.table(), c.q1), run(c.table(), c.q2))
+      val codeA = wholeStageBodies(a)
+      assert(codeA.nonEmpty)
+      assert(codeA == wholeStageBodies(b))
+      assert(ids(a) == c.want1 && ids(b) == c.want2)
+      // the bound value is still a Literal to the scan: pushed to parquet,
+      // or kept as a batch-pruning predicate on the cached relation
+      val plan = a.queryExecution.executedPlan
+      c.pushed match {
+        case Some(filter) =>
+          val pushed = collect(plan) { case s: FileSourceScanExec => s.metadata("PushedFilters") }
+          assert(pushed.size == 1 && pushed.head.contains(filter), pushed)
+        case None =>
+          val preds = collect(plan) { case s: InMemoryTableScanExec => s.predicates }
+          assert(preds.size == 1 && preds.head.exists(_.exists(_.isInstanceOf[ParamLiteral])), preds)
+      }
+    }
+
+  test("a column type a string cannot be cast to is refused") {
+    val df = spark.sql("SELECT 1L AS id, array(1L, 2L) AS xs")
+    assert(runErr(df, "PROJECT id FILTER xs = 1") ==
+      "Cannot compare column xs of type array<bigint> with a literal")
+  }
+
+  // The literal is cast on the driver, so user-settable confs that change
+  // casting or date conversion must not change an answer or raise.
+  private val confMatrix = Seq(
+    "spark.sql.ansi.enabled" -> "true",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.datetime.java8API.enabled" -> "true")
+
+  test("driver-side literal cast: same rows and no error across the conf matrix") {
+    for ((key, value) <- confMatrix) {
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try {
+        val conf = s"$key=$value"
+        assert(run(f3, "PROJECT column1 FILTER column2 = \"x\"").count() == 0, conf)
+        assert(ids(run(dated, "PROJECT id FILTER d = 2024-01-02")) == Set(2L), conf)
+        assert(ids(run(dated, "PROJECT id FILTER d > 2024-01-01")) == Set(2L, 3L), conf)
+      } finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
   }
 }
