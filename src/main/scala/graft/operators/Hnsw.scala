@@ -613,27 +613,33 @@ object Hnsw {
     val touched = pend.select("shard").distinct()
       .collect().map(_.getInt(0)).toSeq
     require(touched.nonEmpty, s"pending table in $indexDir is empty")
-    // PENDING WINS on id collision, at fold exactly like at serve: a
-    // re-added id has both a stale graph row and a fresh pending row,
-    // and folding both would rebuild the shard with two nodes per id
-    // (duplicate (shard, id) keys through the merge, the stale vector
-    // permanently back in the graph once pending truncates)
-    val base = Snapshots
-      .readPartitionedIn(spark, s"$indexDir/graph", "shard", touched)
-      .select(col("shard").cast("int"), col("id").cast("long"), col("vec"))
-      .join(broadcast(pend.select("id")), Seq("id"), "left_anti")
-      .select("shard", "id", "vec")
-    val rebuilt = adjacencyRows(spark, base.unionByName(pend),
-      numShards, mm, efc)
     // composite-scoped merge: row identity is still the id (shard is a
     // function of it), but leading with `shard` lets the layer's
     // per-column envelope intersection carry every shard OUTSIDE the
     // touched-shard interval by reference — with hash sharding the id
     // envelopes interleave across shards, so scoping on id alone would
-    // touch every file
-    Snapshots.merge(spark, s"$indexDir/graph", rebuilt,
+    // touch every file.
+    // The touched shards are rebuilt from the graph version the merge
+    // attempt lands on, not from a read before it: of two racing
+    // folds, the one that commits second would otherwise write its
+    // older rebuild over the first one's shards, and the nodes only
+    // the first one graduated would keep rows no other node links to
+    // (present, never served).
+    Snapshots.mergeDerived(spark, s"$indexDir/graph",
       key = Seq("shard", "id"), statsColumns = Seq("shard", "id"),
-      scoped = true)
+      scoped = true) { gv =>
+      // PENDING WINS on id collision, at fold exactly like at serve: a
+      // re-added id has both a stale graph row and a fresh pending row,
+      // and folding both would rebuild the shard with two nodes per id
+      // (duplicate (shard, id) keys through the merge, the stale vector
+      // permanently back in the graph once pending truncates)
+      val base = Snapshots
+        .readPartitionedIn(spark, s"$indexDir/graph", "shard", touched, v = gv)
+        .select(col("shard").cast("int"), col("id").cast("long"), col("vec"))
+        .join(broadcast(pend.select("id")), Seq("id"), "left_anti")
+        .select("shard", "id", "vec")
+      adjacencyRows(spark, base.unionByName(pend), numShards, mm, efc)
+    }
     // CONDITIONAL truncation (CAS on the pinned version): an
     // unconditional commit here would clobber any add that merged into
     // pending between this fold's read and now — silent vector loss

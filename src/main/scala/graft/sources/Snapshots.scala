@@ -42,6 +42,22 @@ import org.apache.spark.sql.functions._
   * snapshot; a crash after the claim but before the pointer refresh is
   * already durable, because [[version]] reconciles the pointer against
   * the claimed directories.
+  *
+  * Metadata cache: what a read derives from a version's metadata — the
+  * column map, the committed schema, the manifest rows with their bloom
+  * sketches, and which ref and delete sidecars exist — is decoded once
+  * per SparkSession and held as plain values ([[versionMeta]]). Reuse
+  * is safe because the claim rename publishes an immutable directory:
+  * every sidecar is staged before the claim and none is written after
+  * it. The key holds the `snap-<v>` directory's modification time, so a
+  * table deleted and recommitted at the same path never matches an old
+  * entry, and the stat that reads it makes a missing version fail
+  * loudly. [[expire]] drops the entries of the versions it deletes and
+  * [[vacuum]] those whose directories are gone. The cache holds only
+  * what `graft.sidecar.localBytesMax` lets the driver decode, holds
+  * manifest rows only for single-leaf manifests (a two-level manifest
+  * keeps its root-list pruning), and is bounded in bytes with LRU
+  * eviction.
   */
 object Snapshots {
 
@@ -529,30 +545,38 @@ object Snapshots {
       spark: SparkSession, snapDir: String): Option[ColMap] =
     columnMapDfAt(spark, snapDir).map(fromMapDf)
 
-  private def fromMapDf(df: DataFrame): ColMap = {
-    val hasDrop = df.columns.contains("dropped")
-    val hasWide = df.columns.contains("read_type")
-    val rows = df.orderBy("pos").collect().map { r =>
-      val lg = r.getAs[String]("logical")
-      val ph = r.getAs[String]("physical")
-      val dr = hasDrop && !r.isNullAt(r.fieldIndex("dropped")) &&
-        r.getAs[Boolean]("dropped")
-      val wt =
-        if (!hasWide || r.isNullAt(r.fieldIndex("read_type"))) None
-        else Some(r.getAs[String]("read_type"))
-      (lg, ph, dr, wt)
-    }.toSeq
+  private def fromMapDf(df: DataFrame): ColMap =
+    fromMapRows(df.columns.toSeq, df.collect().toSeq)
+
+  /** [[ColMap]] of a `_column_map` sidecar's rows (any order). */
+  private def fromMapRows(
+      columns: Seq[String], unordered: Seq[org.apache.spark.sql.Row]): ColMap = {
+    // positional access: decoded sidecar rows carry no schema
+    val pos = columns.indexOf("pos")
+    val lgI = columns.indexOf("logical")
+    val phI = columns.indexOf("physical")
+    val drI = columns.indexOf("dropped")
+    val wtI = columns.indexOf("read_type")
+    val rows = unordered.sortBy(_.getAs[Number](pos).longValue).map { r =>
+      val dr = drI >= 0 && !r.isNullAt(drI) && r.getBoolean(drI)
+      val wt = if (wtI < 0 || r.isNullAt(wtI)) None else Some(r.getString(wtI))
+      (r.getString(lgI), r.getString(phI), dr, wt)
+    }
     ColMap(
       rows.collect { case (lg, ph, false, _) => (lg, ph) },
       rows.collect { case (_, ph, true, _) => ph },
       rows.collect { case (_, ph, false, Some(t)) => (ph, t) })
   }
 
+  /** Version `v`'s column map (from the metadata cache); None when the
+    * version never published one or its directory is gone. */
   private def mapAt(
       spark: SparkSession,
       tableDir: String,
       v: Long): Option[ColMap] =
-    if (v < 1) None else columnMapPairs(spark, s"$tableDir/snap-$v")
+    if (v < 1) None
+    else try versionMeta(spark, tableDir, v).map
+    catch { case _: java.io.FileNotFoundException => None }
 
   private def columnMapDf(spark: SparkSession, m: ColMap): DataFrame = {
     import spark.implicits._
@@ -756,26 +780,42 @@ object Snapshots {
       tableDir: String,
       snapDir: String,
       selected: DataFrame,
-      m: Option[ColMap] = None): Option[DataFrame] = {
-    val ctx = fc(spark)
+      m: Option[ColMap] = None): Option[DataFrame] =
+    scanFiles(spark, tableDir, snapDir, fileSizes(selected), m,
+      committedSchema(fc(spark), snapDir))
+
+  /** `(file, committed size_bytes)` of each selected manifest row: one
+    * collect of O(selected) rows (zero jobs over a LocalRelation). */
+  private def fileSizes(selected: DataFrame): Seq[(String, Option[Long])] = {
     val projected =
       if (selected.columns.contains("size_bytes"))
         selected.select(col("file"), col("size_bytes"))
       else selected.select(col("file"), lit(null).cast("long").as("size_bytes"))
-    val statuses = projected.collect().map { r =>
-      val p = ctx.makeQualified(
-        new Path(resolveDataPath(tableDir, snapDir, r.getString(0))))
+    projected.collect().map(r =>
+      (r.getString(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSeq
+  }
+
+  /** [[prunedScan]] over an already-collected `(file, size)` selection,
+    * planned from the given committed schema. */
+  private def scanFiles(
+      spark: SparkSession,
+      tableDir: String,
+      snapDir: String,
+      files: Seq[(String, Option[Long])],
+      m: Option[ColMap],
+      committed: Option[org.apache.spark.sql.types.StructType])
+      : Option[DataFrame] = {
+    val ctx = fc(spark)
+    val statuses = files.map { case (f, size) =>
+      val p = ctx.makeQualified(new Path(resolveDataPath(tableDir, snapDir, f)))
       // carried rows from a pre-size manifest chain fall back to one
       // getFileStatus — O(selected), never O(total)
-      val len =
-        if (!r.isNullAt(1)) r.getLong(1)
-        else ctx.getFileStatus(p).getLen
+      val len = size.getOrElse(ctx.getFileStatus(p).getLen)
       new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L, p)
     }
     if (statuses.isEmpty) None
     else Some(ManifestFileIndex.scan(spark, statuses.toIndexedSeq,
-      m.map(_.widened).getOrElse(Nil),
-      committedSchema(ctx, snapDir)))
+      m.map(_.widened).getOrElse(Nil), committed))
   }
 
   /** Sidecars a transaction can publish along with its data, all
@@ -1141,6 +1181,30 @@ object Snapshots {
     ts
   }
 
+  /** Decoded rows of a small flat sidecar directory, as plain values:
+    * what [[readSidecarRows]] returns and the metadata cache holds.
+    */
+  private final case class SidecarRows(
+      schema: org.apache.spark.sql.types.StructType,
+      rows: IndexedSeq[org.apache.spark.sql.Row]) {
+
+    /** The rows as a LocalRelation: zero Spark jobs to plan or collect. */
+    def toDF(spark: SparkSession): DataFrame =
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](
+          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+        schema)
+
+    /** Approximate decoded heap size, for the cache's byte bound. */
+    lazy val bytes: Long = rows.iterator.map { r =>
+      64L + r.toSeq.iterator.map {
+        case b: Array[Byte] => 24L + b.length
+        case s: String => 48L + 2L * s.length
+        case _ => 16L
+      }.sum
+    }.sum
+  }
+
   /** Driver-side read of a small flat parquet directory into a LOCAL
     * relation: zero Spark jobs — no footer-sampling inference job, no
     * collect job for driver-bound consumers, and a LocalRelation join
@@ -1149,7 +1213,12 @@ object Snapshots {
     * non-flat; mixed per-file schemas also fall back.
     */
   private def readSidecarLocal(
-      spark: SparkSession, dir: String): Option[DataFrame] = {
+      spark: SparkSession, dir: String): Option[DataFrame] =
+    readSidecarRows(spark, dir).map(_.toDF(spark))
+
+  /** [[readSidecarLocal]]'s decode, returning the plain rows. */
+  private def readSidecarRows(
+      spark: SparkSession, dir: String): Option[SidecarRows] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val ctx = fc(spark)
@@ -1160,9 +1229,7 @@ object Snapshots {
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }.toSeq.sortBy(_.getPath.getName)
     if (files.isEmpty) return None
-    val cap = spark.conf.getOption(LocalSidecarBytesConf)
-      .map(_.toLong).getOrElse(LocalSidecarBytesDefault)
-    if (files.map(_.getLen).sum > cap) return None
+    if (files.map(_.getLen).sum > localSidecarBytes(spark)) return None
     val conf = spark.sessionState.newHadoopConf()
     var schema: org.apache.spark.sql.types.StructType = null
     var msgStr: String = null
@@ -1243,11 +1310,12 @@ object Snapshots {
         }
       } finally reader.close()
     }
-    Some(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(out.toSeq).asJava),
-      schema))
+    Some(SidecarRows(schema, out.toIndexedSeq))
   }
+
+  private def localSidecarBytes(spark: SparkSession): Long =
+    spark.conf.getOption(LocalSidecarBytesConf)
+      .map(_.toLong).getOrElse(LocalSidecarBytesDefault)
 
   /** A sidecar directory as a DataFrame: driver-local when small and
     * flat, the Spark reader otherwise. Drop-in for
@@ -1374,6 +1442,161 @@ object Snapshots {
     }
 
   // ---- end driver-local sidecar I/O ----------------------------------
+
+  // ---- per-session cache of decoded version metadata ------------------
+  //
+  // A claimed `snap-<v>` never changes, so what a read derives from its
+  // metadata — column map, committed schema, manifest rows with their
+  // bloom sketches, which delete/ref sidecars exist — is decoded once
+  // per session and reused by every later read of that version (the
+  // per-table snapshot and manifest caches of Delta and Iceberg). See
+  // the safety argument in [[versionMeta]].
+
+  /** One committed version's metadata as plain values. `manifest` holds
+    * the manifest rows only for a single-leaf manifest (no `_root`
+    * list) that [[readSidecarRows]] decodes on the driver (under
+    * `graft.sidecar.localBytesMax`, flat columns) into at most
+    * [[MetaManifestBytes]]. Any other manifest keeps the Spark-side
+    * readers, whose root list prunes whole leaves before one is read.
+    */
+  private final case class VersionMeta(
+      map: Option[ColMap],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      hasManifest: Boolean,
+      manifest: Option[SidecarRows],
+      hasRefs: Boolean,
+      hasMorDeletes: Boolean,
+      hasPosDeletes: Boolean) {
+    def bytes: Long = 4096L + manifest.map(_.bytes).getOrElse(0L)
+
+    /** The committed physical schema with widened read types pinned —
+      * the schema every raw scan of this version presents. */
+    def readSchema: Option[org.apache.spark.sql.types.StructType] =
+      schema.map(applyWiden(_, map.map(_.widened).getOrElse(Nil)))
+  }
+
+  /** Bound on the decoded bytes one session's cache holds (LRU beyond). */
+  private val MetaCacheBytes: Long = 32L << 20
+
+  /** Bound on one version's decoded manifest rows: bloom sketches are
+    * 8 KB each decoded but compress well on disk, so a manifest under
+    * the on-disk sidecar cap can decode far larger. */
+  private val MetaManifestBytes: Long = MetaCacheBytes / 4
+
+  /** Key: qualified `snap-<v>` path, its modification time, and the
+    * sidecar byte cap the entry was decoded under (an entry never
+    * serves rows the session's current cap would refuse). */
+  private type MetaKey = (String, Long, Long)
+
+  private final class MetaCache {
+    private val entries =
+      new java.util.LinkedHashMap[MetaKey, VersionMeta](16, 0.75f, true)
+    private var bytes = 0L
+
+    def get(k: MetaKey): Option[VersionMeta] = synchronized(Option(entries.get(k)))
+
+    def put(k: MetaKey, m: VersionMeta): Unit = synchronized {
+      if (m.bytes <= MetaCacheBytes) {
+        Option(entries.put(k, m)).foreach(old => bytes -= old.bytes)
+        bytes += m.bytes
+        val it = entries.values.iterator
+        while (bytes > MetaCacheBytes && it.hasNext) {
+          bytes -= it.next().bytes
+          it.remove()
+        }
+      }
+    }
+
+    def holds(path: String): Boolean = synchronized {
+      scala.jdk.CollectionConverters.SetHasAsScala(entries.keySet).asScala
+        .exists(_._1 == path)
+    }
+
+    def drop(path: String => Boolean): Unit = synchronized {
+      val it = entries.entrySet.iterator
+      while (it.hasNext) {
+        val e = it.next()
+        if (path(e.getKey._1)) { bytes -= e.getValue.bytes; it.remove() }
+      }
+    }
+  }
+
+  private val metaCaches = new java.util.WeakHashMap[SparkSession, MetaCache]()
+
+  private def metaCache(spark: SparkSession): MetaCache =
+    metaCaches.synchronized(metaCaches.computeIfAbsent(spark, _ => new MetaCache))
+
+  /** Version `v`'s decoded metadata, from the session cache or decoded
+    * now. Safe to reuse because:
+    *  - the claim rename publishes a COMPLETE, immutable `snap-<v>`
+    *    (every sidecar is staged before the claim, none is written
+    *    after it);
+    *  - the directory's modification time is part of the key, so a
+    *    table deleted and recommitted at the same path — a new
+    *    directory — never matches an old entry (this needs a file
+    *    system that keeps directory mtimes, as local and HDFS paths,
+    *    where the claim rename runs, do);
+    *  - [[expire]] drops the entries of the versions it deletes, and
+    *    [[vacuum]] drops entries whose directories are gone.
+    * The one stat that reads the mtime also makes a missing (expired,
+    * vacuumed, never committed) version fail loudly with
+    * `FileNotFoundException`.
+    */
+  private def versionMeta(
+      spark: SparkSession, tableDir: String, v: Long): VersionMeta = {
+    val ctx = fc(spark)
+    val dir = ctx.makeQualified(new Path(s"$tableDir/snap-$v"))
+    val key = (dir.toString, ctx.getFileStatus(dir).getModificationTime,
+      localSidecarBytes(spark))
+    val cache = metaCache(spark)
+    cache.get(key).getOrElse {
+      val m = decodeVersionMeta(spark, ctx, dir)
+      cache.put(key, m)
+      m
+    }
+  }
+
+  private def decodeVersionMeta(
+      spark: SparkSession, ctx: FileContext, dir: Path): VersionMeta = {
+    val names = ctx.util().listStatus(dir).iterator.map(_.getPath.getName).toSet
+    val snapDir = dir.toString
+    val map =
+      if (!names(ColumnMapName)) None
+      else Some(readSidecarRows(spark, s"$snapDir/$ColumnMapName") match {
+        case Some(s) => fromMapRows(s.schema.fieldNames.toSeq, s.rows)
+        case None => fromMapDf(spark.read.parquet(s"$snapDir/$ColumnMapName"))
+      })
+    val hasManifest = names("_manifest")
+    VersionMeta(
+      map = map,
+      schema = if (names("_schema")) committedSchema(ctx, snapDir) else None,
+      hasManifest = hasManifest,
+      manifest =
+        if (!hasManifest ||
+            ctx.util().exists(new Path(s"${manifestDir(snapDir)}/_root"))) None
+        else readSidecarRows(spark, manifestDir(snapDir))
+          .filter(_.bytes <= MetaManifestBytes),
+      hasRefs = names("_refs"),
+      hasMorDeletes = names("_mor_deletes"),
+      hasPosDeletes = names("_pos_deletes"))
+  }
+
+  /** Whether this session's metadata cache holds version `v`. */
+  private[sources] def metaCached(
+      spark: SparkSession, tableDir: String, v: Long): Boolean =
+    metaCache(spark).holds(
+      fc(spark).makeQualified(new Path(s"$tableDir/snap-$v")).toString)
+
+  /** Drop the cached entries of `tableDir`'s versions that `gone` names
+    * (by version number), e.g. the ones [[expire]] deleted. */
+  private def dropCachedVersions(
+      spark: SparkSession, tableDir: String, gone: Seq[Long]): Unit =
+    if (gone.nonEmpty) {
+      val ctx = fc(spark)
+      val dirs = gone.map(v =>
+        ctx.makeQualified(new Path(s"$tableDir/snap-$v")).toString).toSet
+      metaCache(spark).drop(dirs)
+    }
 
   private def stage(
       spark: SparkSession,
@@ -2032,12 +2255,15 @@ object Snapshots {
     * manifest-resolution cost every real format pays.
     */
   def readVersion(spark: SparkSession, tableDir: String, v: Long): DataFrame = {
-    // rename-without-rewrite: the assembled physical-named frame is
-    // presented under the version's logical names. The map sidecar is
-    // loaded ONCE and threaded through the raw assembly.
-    val m = mapAt(spark, tableDir, v)
-    mapLogical(readVersionRawWith(spark, tableDir, v, m), m)
+    require(v >= 1, s"no committed snapshot (version $v) in $tableDir")
+    readVersionWith(spark, tableDir, v, versionMeta(spark, tableDir, v))
   }
+
+  // rename-without-rewrite: the assembled physical-named frame is
+  // presented under the version's logical names
+  private def readVersionWith(
+      spark: SparkSession, tableDir: String, v: Long, meta: VersionMeta): DataFrame =
+    mapLogical(readVersionRawWith(spark, tableDir, v, meta), meta.map)
 
   /** [[readVersion]] under PHYSICAL column names (delete sidecars
     * applied, column map not): the frame internal write paths rebuild
@@ -2045,24 +2271,23 @@ object Snapshots {
     * schema.
     */
   private def readVersionRaw(
-      spark: SparkSession, tableDir: String, v: Long): DataFrame =
-    readVersionRawWith(spark, tableDir, v,
-      columnMapPairs(spark, s"$tableDir/snap-$v"))
+      spark: SparkSession, tableDir: String, v: Long): DataFrame = {
+    require(v >= 1, s"no committed snapshot (version $v) in $tableDir")
+    readVersionRawWith(spark, tableDir, v, versionMeta(spark, tableDir, v))
+  }
 
   private def readVersionRawWith(
       spark: SparkSession,
       tableDir: String,
       v: Long,
-      m: Option[ColMap]): DataFrame = {
-    require(v >= 1, s"no committed snapshot (version $v) in $tableDir")
+      meta: VersionMeta): DataFrame = {
     val snapDir = s"$tableDir/snap-$v"
-    val ctx = fc(spark)
-    val hasRefs = ctx.util().exists(new Path(s"$snapDir/_refs"))
-    val pinned = committedSchema(ctx, snapDir)
+    val m = meta.map
+    val pinned = meta.schema
     val base =
-      if (!hasRefs)
+      if (!meta.hasRefs)
         readParquetRaw(spark, m, Seq(snapDir), pinned)
-      else if (ctx.util().exists(new Path(manifestDir(snapDir))))
+      else if (meta.hasManifest)
         // ref-carrying snapshot WITH a manifest: plan the full scan
         // through the manifest-backed FileIndex — path + committed
         // size per file, no per-file filesystem re-listing (the cost
@@ -2071,16 +2296,35 @@ object Snapshots {
         // manifest, but it holds zero rows by construction. A row-less
         // manifest (everything deleted) falls back to the path list,
         // which still supplies the schema via the marker.
-        prunedScan(spark, tableDir, snapDir,
-            manifestLeaves(spark, snapDir, _ => None), m)
+        scanFiles(spark, tableDir, snapDir,
+            fileSizes(leafRows(spark, snapDir, meta, _ => None)), m, pinned)
           .getOrElse(
             readParquetRaw(spark, m, dataFiles(spark, tableDir, v), pinned))
       else readParquetRaw(spark, m, dataFiles(spark, tableDir, v), pinned)
     // merge-on-read: a snapshot may carry delete sidecars instead of
     // rewritten data files; every reader applies them (positional
     // first — it needs the raw scan's _metadata — then keyed)
-    applyDeleteSidecars(spark, snapDir, base)
+    applyDeleteSidecarsWith(spark, snapDir, base,
+      meta.hasPosDeletes, meta.hasMorDeletes)
   }
+
+  /** A version's leaf-manifest rows: the cached rows of a single-leaf
+    * manifest (a LocalRelation), else [[manifestLeaves]] with
+    * `rootKeep`.
+    */
+  private def leafRows(
+      spark: SparkSession,
+      snapDir: String,
+      meta: VersionMeta,
+      rootKeep: DataFrame => Option[Column]): DataFrame =
+    meta.manifest.map(_.toDF(spark))
+      .getOrElse(manifestLeaves(spark, snapDir, rootKeep))
+
+  /** Files in a version: cached manifest rows, or [[manifestTotal]]. */
+  private def manifestTotalOf(
+      spark: SparkSession, snapDir: String, meta: VersionMeta): Long =
+    meta.manifest.map(_.rows.size.toLong)
+      .getOrElse(manifestTotal(spark, snapDir))
 
   /** A version's raw data file list: own files plus `_refs`. */
   private def dataFiles(
@@ -2124,16 +2368,26 @@ object Snapshots {
     */
   private def applyDeleteSidecars(
       spark: SparkSession, snapDir: String, raw: DataFrame): DataFrame = {
-    val keyedP = new Path(s"$snapDir/_mor_deletes")
-    val posP = new Path(s"$snapDir/_pos_deletes")
     val ctx = fc(spark)
+    applyDeleteSidecarsWith(spark, snapDir, raw,
+      ctx.util().exists(new Path(s"$snapDir/_pos_deletes")),
+      ctx.util().exists(new Path(s"$snapDir/_mor_deletes")))
+  }
+
+  private def applyDeleteSidecarsWith(
+      spark: SparkSession,
+      snapDir: String,
+      raw: DataFrame,
+      hasPos: Boolean,
+      hasKeyed: Boolean): DataFrame = {
+    val keyedP = new Path(s"$snapDir/_mor_deletes")
     val afterPos =
-      if (!ctx.util().exists(posP)) raw
+      if (!hasPos) raw
       else applyPosDeletes(spark, snapDir,
           raw.withColumn("_graft_f", scanFileName)
             .withColumn("_graft_i", col("_metadata.row_index")))
         .drop("_graft_f", "_graft_i")
-    if (!ctx.util().exists(keyedP)) afterPos
+    if (!hasKeyed) afterPos
     else {
       // NULL-SAFE anti-join: a plain USING-columns anti-join never
       // matches NULL = NULL, so a predicate-matched row with a NULL key
@@ -2272,27 +2526,49 @@ object Snapshots {
       lower: Any,
       upper: Any): (Seq[String], Long) = {
     val snapDir = s"$tableDir/snap-$v"
-    val ph = physicalOf(mapAt(spark, tableDir, v), colName)
-    val total = manifestTotal(spark, snapDir)
-    val sel = rangeSelection(spark, snapDir, ph, lower, upper)
-      .select("file").collect()
-      .map(r => resolveDataPath(tableDir, snapDir, r.getString(0))).toSeq
+    val meta = versionMeta(spark, tableDir, v)
+    val ph = physicalOf(meta.map, colName)
+    val total = manifestTotalOf(spark, snapDir, meta)
+    val sel = fileSizes(rangeSelection(spark, snapDir, meta, ph, lower, upper))
+      .map(f => resolveDataPath(tableDir, snapDir, f._1))
     (sel, total)
   }
 
-  /** The manifest rows surviving a range probe: root-list pruning
+  /** The manifest rows surviving a range probe: the per-file min/max
+    * filter over the cached manifest rows (a LocalRelation, so no job),
+    * or, for a manifest the cache does not hold, root-list pruning
     * first (whole leaves whose envelope misses the range are never
-    * read), then the per-file min/max filter — both in Spark.
+    * read) and then the same filter, both in Spark.
     */
   private def rangeSelection(
       spark: SparkSession,
       snapDir: String,
+      meta: VersionMeta,
       colName: String,
       lower: Any,
       upper: Any): DataFrame =
-    manifestLeaves(spark, snapDir, rangeRootKeep(colName, lower, upper))
+    leafRows(spark, snapDir, meta, rangeRootKeep(colName, lower, upper))
       .filter(col(s"max_$colName") >= lit(lower) &&
         col(s"min_$colName") <= lit(upper))
+
+  /** Scan the selected `files` of version `ver`, apply its delete
+    * sidecars, present logical names and keep the rows `residual`
+    * matches; an empty selection is the version's empty frame.
+    */
+  private def prunedRead(
+      spark: SparkSession,
+      tableDir: String,
+      ver: Long,
+      meta: VersionMeta,
+      files: Seq[(String, Option[Long])],
+      residual: Column): DataFrame = {
+    val snapDir = s"$tableDir/snap-$ver"
+    scanFiles(spark, tableDir, snapDir, files, meta.map, meta.schema)
+      .map(raw => mapLogical(applyDeleteSidecarsWith(spark, snapDir, raw,
+          meta.hasPosDeletes, meta.hasMorDeletes), meta.map)
+        .filter(residual))
+      .getOrElse(readVersionWith(spark, tableDir, ver, meta).filter(lit(false)))
+  }
 
   /** Range read through the statistics manifest: prune data files by
     * their committed min/max BEFORE the scan, then apply the residual
@@ -2312,16 +2588,12 @@ object Snapshots {
     val ver = if (v >= 1) v else version(spark, tableDir)
     require(ver >= 1, s"no committed snapshot in $tableDir")
     val snapDir = s"$tableDir/snap-$ver"
-    val pairs = mapAt(spark, tableDir, ver)
-    val ph = physicalOf(pairs, colName)
+    val meta = versionMeta(spark, tableDir, ver)
+    val ph = physicalOf(meta.map, colName)
     val residual = col(colName).between(lit(lower), lit(upper))
-    if (!fc(spark).util().exists(new Path(manifestDir(snapDir))))
-      readVersion(spark, tableDir, ver).filter(residual)
-    else prunedScan(spark, tableDir, snapDir,
-        rangeSelection(spark, snapDir, ph, lower, upper), pairs)
-      .map(raw => mapLogical(applyDeleteSidecars(spark, snapDir, raw), pairs)
-        .filter(residual))
-      .getOrElse(readVersion(spark, tableDir, ver).filter(lit(false)))
+    if (!meta.hasManifest) readVersionWith(spark, tableDir, ver, meta).filter(residual)
+    else prunedRead(spark, tableDir, ver, meta,
+      fileSizes(rangeSelection(spark, snapDir, meta, ph, lower, upper)), residual)
   }
 
   /** Compound range read: AND of `[lower, upper]` predicates over
@@ -2329,9 +2601,10 @@ object Snapshots {
     * survives only when EVERY column's envelope can intersect its
     * range — on a z-ordered layout that intersection is the
     * multi-dimensional rectangle the curve exists to serve, far
-    * sharper than either range alone). Root-list envelopes prune whole
-    * leaves first for every column the root covers; the conjunction of
-    * residuals keeps rows exact. Falls back to a plain filtered scan
+    * sharper than either range alone). For a manifest the metadata
+    * cache does not hold, root-list envelopes prune whole leaves first for
+    * every column the root covers; the conjunction of residuals keeps
+    * rows exact. Falls back to a plain filtered scan
     * when the snapshot has no manifest. `v = 0` reads the latest.
     */
   def readRanges(
@@ -2343,14 +2616,13 @@ object Snapshots {
     val ver = if (v >= 1) v else version(spark, tableDir)
     require(ver >= 1, s"no committed snapshot in $tableDir")
     val snapDir = s"$tableDir/snap-$ver"
-    val pairs = mapAt(spark, tableDir, ver)
+    val meta = versionMeta(spark, tableDir, ver)
     val phRanges = ranges.map { case (c, lo, hi) =>
-      (physicalOf(pairs, c), lo, hi) }
+      (physicalOf(meta.map, c), lo, hi) }
     val residual = ranges
       .map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }
       .reduce(_ && _)
-    if (!fc(spark).util().exists(new Path(manifestDir(snapDir))))
-      readVersion(spark, tableDir, ver).filter(residual)
+    if (!meta.hasManifest) readVersionWith(spark, tableDir, ver, meta).filter(residual)
     else {
       val rootKeep = (root: DataFrame) => phRanges.flatMap {
         case (c, lo, hi) => rangeRootKeep(c, lo, hi)(root)
@@ -2358,11 +2630,8 @@ object Snapshots {
       val rowKeep = phRanges.map { case (c, lo, hi) =>
         col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
       }.reduce(_ && _)
-      prunedScan(spark, tableDir, snapDir,
-        manifestLeaves(spark, snapDir, rootKeep).filter(rowKeep), pairs)
-        .map(raw => mapLogical(applyDeleteSidecars(spark, snapDir, raw), pairs)
-          .filter(residual))
-        .getOrElse(readVersion(spark, tableDir, ver).filter(lit(false)))
+      prunedRead(spark, tableDir, ver, meta,
+        fileSizes(leafRows(spark, snapDir, meta, rootKeep).filter(rowKeep)), residual)
     }
   }
 
@@ -2407,13 +2676,13 @@ object Snapshots {
       v: Long = 0L): Boolean = {
     val ver = if (v >= 1) v else version(spark, tableDir)
     require(ver >= 1, s"no committed snapshot in $tableDir")
-    val snapDir = s"$tableDir/snap-$ver"
-    fc(spark).util().exists(new Path(manifestDir(snapDir))) && {
-      val pairs = mapAt(spark, tableDir, ver)
-      val names = readSidecar(spark, manifestDir(snapDir))
-        .schema.map(_.name).toSet
+    val meta = versionMeta(spark, tableDir, ver)
+    meta.hasManifest && {
+      val names = meta.manifest.map(_.schema)
+        .getOrElse(readSidecar(spark, manifestDir(s"$tableDir/snap-$ver")).schema)
+        .map(_.name).toSet
       cols.forall { c =>
-        val ph = physicalOf(pairs, c)
+        val ph = physicalOf(meta.map, c)
         names(s"min_$ph") && names(s"max_$ph")
       }
     }
@@ -2501,43 +2770,85 @@ object Snapshots {
       colName: String,
       value: Any): (Seq[String], Long) = {
     val snapDir = s"$tableDir/snap-$v"
-    val ph = physicalOf(mapAt(spark, tableDir, v), colName)
-    val total = manifestTotal(spark, snapDir)
-    val sel = pointSelection(spark, tableDir, v, ph, value)
-      .select("file").collect()
-      .map(r => resolveDataPath(tableDir, snapDir, r.getString(0))).toSeq
+    val meta = versionMeta(spark, tableDir, v)
+    val ph = physicalOf(meta.map, colName)
+    val total = manifestTotalOf(spark, snapDir, meta)
+    val sel = pointSelection(spark, tableDir, v, meta, ph, value)
+      .map(f => resolveDataPath(tableDir, snapDir, f._1))
     (sel, total)
   }
 
-  /** The manifest rows surviving a bloom point probe. Root-list
-    * envelopes cannot prune membership sketches (a bloom has no
-    * ordering), so every leaf row is probed — but the probe itself runs
-    * on the EXECUTORS and only survivors reach the driver.
+  /** `(file, size_bytes)` of the manifest rows surviving a bloom point
+    * probe on the PHYSICAL column `colName`. The literal is hashed on
+    * the driver ([[probeHash]]). A manifest held in the metadata cache
+    * is probed on the driver too: one sketch deserialization per file,
+    * no Spark job. Any other manifest is probed by a UDF on the
+    * EXECUTORS after the root's per-leaf bloom unions prune whole
+    * leaves, and only survivors reach the driver ([[bloomProbe]]).
     */
   private def pointSelection(
       spark: SparkSession,
       tableDir: String,
       v: Long,
+      meta: VersionMeta,
       colName: String,
-      value: Any): DataFrame = {
-    val snapDir = s"$tableDir/snap-$v"
+      value: Any): Seq[(String, Option[Long])] = {
     // xxhash64 is TYPE-sensitive: the probe literal must hash as the
     // same type the sketch was built over, or every lookup would be a
     // silent false negative — cast to the column's actual type first.
-    // `colName` is PHYSICAL here (callers translate), so the type
-    // lookup runs against the raw schema.
-    val colType = readVersionRaw(spark, tableDir, v).schema(colName).dataType
-    val hashed = spark.range(1)
-      .select(xxhash64(lit(value).cast(colType))).head().getLong(0)
-    // per-row sketches can't use the BloomFilterMightContain EXPRESSION
-    // (it requires a constant sketch), so probe them with a deserialize
-    // UDF on the EXECUTORS and collect only the survivors: the driver
-    // cost is O(selected paths) instead of O(total files × sketch
-    // bytes) — at 10⁶ files × KB sketches the old coordinator-side
-    // probe was a GB-scale collect. The UDF is interpreted, but it runs
-    // over manifest rows (one per file), never data rows.
+    val schema = meta.readSchema
+      .getOrElse(readVersionRawWith(spark, tableDir, v, meta).schema)
+    val hashed = probeHash(spark, value, schema(colName).dataType)
+    val bloom = s"bloom_$colName"
+    def noBloom = s"version $v of $tableDir has no bloom sketch for $colName"
+    meta.manifest match {
+      case Some(m) =>
+        val names = m.schema.fieldNames
+        val bi = names.indexOf(bloom)
+        require(bi >= 0, noBloom)
+        val fi = names.indexOf("file")
+        val si = names.indexOf("size_bytes")
+        m.rows.filter(r =>
+          // a null sketch means a zero-row file: nothing to contain
+          !r.isNullAt(bi) && graft.functions.BloomFunctions
+            .mightContainSerialized(r.getAs[Array[Byte]](bi), hashed))
+          .map(r => (r.getString(fi),
+            if (si < 0 || r.isNullAt(si)) None else Some(r.getLong(si))))
+      case None =>
+        val probed = bloomProbe(spark, s"$tableDir/snap-$v", bloom, hashed)
+        require(probed.columns.contains(bloom), noBloom)
+        fileSizes(probed)
+    }
+  }
+
+  /** xxhash64 of `value` as column type `t`, evaluated on the driver
+    * with what `xxhash64(lit(value).cast(t))` plans to: `Literal(value)`,
+    * a `Cast` under the session time zone and the session eval mode
+    * (ANSI or legacy), and `XxHash64` with its default seed — the hash
+    * the sketch's writer applied to the column.
+    */
+  private[sources] def probeHash(
+      spark: SparkSession, value: Any, t: org.apache.spark.sql.types.DataType): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal, XxHash64}
+    val conf = spark.sessionState.conf
+    val cast = Cast(Literal(value), t, Some(conf.sessionLocalTimeZone),
+      EvalMode.fromSQLConf(conf))
+    require(cast.checkInputDataTypes().isSuccess,
+      s"cannot cast probe value $value to $t")
+    new XxHash64(Seq(Literal(cast.eval(), t))).eval().asInstanceOf[Long]
+  }
+
+  /** Executor-side bloom probe of the manifest leaves, for manifests
+    * the metadata cache does not hold: per-row sketches can't use the
+    * BloomFilterMightContain EXPRESSION (it requires a constant
+    * sketch), so a deserialize UDF probes them and only survivors are
+    * collected — the driver cost is O(selected paths), not O(total
+    * files × sketch bytes). The UDF is interpreted, but it runs over
+    * manifest rows (one per file), never data rows.
+    */
+  private def bloomProbe(
+      spark: SparkSession, snapDir: String, bloom: String, hashed: Long): DataFrame = {
     val probe = udf((sketch: Array[Byte]) =>
-      // a null sketch means a zero-row file: nothing to contain
       sketch != null &&
         graft.functions.BloomFunctions.mightContainSerialized(sketch, hashed))
     // leaf-granularity pruning first: the root's per-leaf bloom UNION
@@ -2545,17 +2856,17 @@ object Snapshots {
     // the membership complement of the range probes' lo_/hi_ envelopes
     // (older roots without the column read every leaf, still correct)
     val m = manifestLeaves(spark, snapDir, root =>
-      if (!root.columns.contains(s"bloom_$colName")) None
-      else Some(probe(col(s"bloom_$colName"))))
-    require(m.columns.contains(s"bloom_$colName"),
-      s"version $v of $tableDir has no bloom sketch for $colName")
-    m.filter(probe(col(s"bloom_$colName")))
+      if (!root.columns.contains(bloom)) None else Some(probe(col(bloom))))
+    if (m.columns.contains(bloom)) m.filter(probe(col(bloom))) else m
   }
 
   /** Equality read through the bloom manifest: prune files whose
-    * sketch rules the value out, then apply the exact equality to the
-    * survivors. Falls back to a plain filtered scan when the snapshot
-    * has no bloom for the column. `v = 0` reads the latest version.
+    * sketch rules the value out ([[pointSelection]]: a driver-side hash
+    * and, for a manifest in the metadata cache, a driver-side probe),
+    * then scan the survivors with the exact equality as a residual —
+    * one Spark job, the data scan. Falls back to a plain filtered scan
+    * when the snapshot has no bloom for the column. `v = 0` reads the
+    * latest version.
     */
   def readPoint(
       spark: SparkSession,
@@ -2565,19 +2876,15 @@ object Snapshots {
       v: Long = 0L): DataFrame = {
     val ver = if (v >= 1) v else version(spark, tableDir)
     require(ver >= 1, s"no committed snapshot in $tableDir")
-    val pairs = mapAt(spark, tableDir, ver)
-    val ph = physicalOf(pairs, colName)
+    val meta = versionMeta(spark, tableDir, ver)
+    val ph = physicalOf(meta.map, colName)
     val residual = col(colName) === lit(value)
-    val manifest = new Path(manifestDir(s"$tableDir/snap-$ver"))
-    val hasBloom = fc(spark).util().exists(manifest) &&
-      readSidecar(spark, manifest.toString).columns.contains(s"bloom_$ph")
-    if (!hasBloom) readVersion(spark, tableDir, ver).filter(residual)
-    else prunedScan(spark, tableDir, s"$tableDir/snap-$ver",
-        pointSelection(spark, tableDir, ver, ph, value), pairs)
-      .map(raw => mapLogical(
-          applyDeleteSidecars(spark, s"$tableDir/snap-$ver", raw), pairs)
-        .filter(residual))
-      .getOrElse(readVersion(spark, tableDir, ver).filter(lit(false)))
+    val hasBloom = meta.hasManifest && meta.manifest.map(_.schema.fieldNames.toSeq)
+      .getOrElse(spark.read.parquet(manifestDir(s"$tableDir/snap-$ver")).columns.toSeq)
+      .contains(s"bloom_$ph")
+    if (!hasBloom) readVersionWith(spark, tableDir, ver, meta).filter(residual)
+    else prunedRead(spark, tableDir, ver, meta,
+      pointSelection(spark, tableDir, ver, meta, ph, value), residual)
   }
 
   /** Partition-pruned file selection for equality probes on RAW
@@ -2815,7 +3122,9 @@ object Snapshots {
     * the broadcast-local probe side (see [[mergeDerived]]). A memory
     * bound, not a core-count constant: ≤ cap rows × key width live
     * once on the driver and once per executor (the broadcast hash
-    * relation) — 1M narrow keys is tens of MB. Batches beyond the cap
+    * relation) — 1M narrow keys is tens of MB. The key bytes are
+    * bounded too, by `graft.sidecar.localBytesMax` (wide or composite
+    * keys reach the byte bound first). Batches beyond either bound
     * keep the shuffled shape, which is the correct degradation for
     * executor-sized updates at any scale.
     */
@@ -2823,39 +3132,70 @@ object Snapshots {
   private val MergeLocalKeysDefault = 1000000
 
   /** The update batch's key projection as a broadcast LOCAL relation,
-    * when provably small: ONE capped limit-collect job, `None` past
-    * the cap. `coalesce(1)` pins the take to a single task — the
-    * default executeTake escalation (1, then 4×… partitions) would
+    * when provably small: ONE capped limit-collect job, `None` past the
+    * row or byte bound. `coalesce(1)` pins the take to a single task —
+    * the default executeTake escalation (1, then 4×… partitions) would
     * spend 2-3 scheduling rounds on any multi-partition batch, which
     * is exactly the fixed cost this path exists to remove — and the
-    * take's iterator early-aborts after cap+1 rows, so an over-cap
-    * batch costs O(cap) rows of serial read, never a full pass.
+    * take's iterator early-aborts past the row limit, so an over-cap
+    * batch costs O(cap) rows of serial read, never a full pass. That
+    * early abort only pays off on a scan-shaped plan: a batch whose
+    * plan holds an exchange or an aggregate would run its whole
+    * upstream once for the probe and again inside the merge, so such
+    * batches take the shuffled shape without a probe.
     * Duplicate or null key tuples ride along untouched — an anti/semi
     * equi-join's result is insensitive to build-side duplicates, and
     * null keys match nothing on either shape, so the substitution is
     * exact.
     */
-  private def localKeyFrame(
+  private[sources] def localKeyFrame(
       spark: SparkSession,
       ups: DataFrame,
       key: Seq[String]): Option[DataFrame] = {
-    val cap = spark.conf.getOption(MergeLocalKeysConf)
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val rowCap = spark.conf.getOption(MergeLocalKeysConf)
       .map(_.toInt).getOrElse(MergeLocalKeysDefault)
+    val byteCap = localSidecarBytes(spark)
     val proj = ups.select(key.map(col): _*)
-    // a batch that is ALREADY a local relation (Seq.toDF ingest, tiny
-    // derived frames the optimizer constant-folded) needs no collect
-    // at all — zero jobs, straight to the broadcast hint
-    proj.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        return if (lr.data.length > cap) None else Some(broadcast(proj))
+    val plan = proj.queryExecution.optimizedPlan
+    plan match {
+      // a batch that is ALREADY a local relation (Seq.toDF ingest, tiny
+      // derived frames the optimizer constant-folded) needs no collect
+      // at all — zero jobs, straight to the broadcast hint
+      case lr: LocalRelation =>
+        val bytes = lr.data.iterator
+          .map(r => keyRowBytes(r.toSeq(lr.schema))).sum
+        return if (lr.data.length > rowCap || bytes > byteCap) None
+          else Some(broadcast(proj))
       case _ => ()
     }
-    val rows = proj.coalesce(1).limit(cap + 1).collect()
-    if (rows.length > cap) None
+    val shuffles = plan.exists {
+      case _: Aggregate | _: RepartitionOperation | _: RebalancePartitions
+          | _: Join | _: Window => true
+      case s: Sort => s.global
+      case _ => false
+    }
+    if (shuffles) return None
+    // every key column estimates at 8 bytes or more, so this row limit
+    // keeps the collect itself inside the byte bound for fixed-width
+    // keys; wider (string, binary) keys are measured once collected
+    val limit = math.min(rowCap.toLong, byteCap / (8L * math.max(1, key.size))).toInt
+    val rows = proj.coalesce(1).limit(limit + 1).collect()
+    if (rows.length > limit ||
+        rows.iterator.map(r => keyRowBytes(r.toSeq)).sum > byteCap) None
     else Some(broadcast(spark.createDataFrame(
       java.util.Arrays.asList(rows.distinct.toIndexedSeq: _*),
       proj.schema)))
   }
+
+  /** Estimated bytes of one key row: 8 per field plus the length of a
+    * string or binary value (the UnsafeRow layout, roughly). */
+  private def keyRowBytes(values: Seq[Any]): Long = values.iterator.map {
+    case s: String => 8L + s.length
+    case u: org.apache.spark.unsafe.types.UTF8String => 8L + u.numBytes
+    case b: Array[Byte] => 8L + b.length
+    case _ => 8L
+  }.sum
 
   /** Copy-on-write MERGE (the upsert half of `MERGE INTO`): rows of the
     * latest snapshot whose `key` matches a row in `updates` are
@@ -3359,7 +3699,7 @@ object Snapshots {
       // sidecar derived from it sit next to physical-named data files,
       // and a logical-named marker would poison any schema taken from
       // this commit (the r10 committed-schema path caught this).
-      (readVersionRawWith(spark, tableDir, base, morMap).limit(0),
+      (readVersionRaw(spark, tableDir, base).limit(0),
         Sidecars(changes = feed, refs = Some(rootRelativeFiles(spark, tableDir, base)),
           carriedManifest = carriedManifestOf(spark, tableDir, base),
           morDeletes = Some(unmapToPhysical(dels, morMap)),
@@ -4713,6 +5053,7 @@ object Snapshots {
       }
     val expired = all.filter(v => !needed(s"snap-$v"))
     expired.foreach(v => ctx.delete(new Path(s"$tableDir/snap-$v"), true))
+    dropCachedVersions(spark, tableDir, expired)
     expired
   }
 
@@ -4740,6 +5081,11 @@ object Snapshots {
           st.getModificationTime < cutoff
       }.toSeq
       stale.foreach(st => ctx.delete(st.getPath, true))
+      // release cached metadata of versions whose directories are gone
+      // (e.g. expired by another process)
+      val snaps = ctx.makeQualified(dir).toString + "/snap-"
+      metaCache(spark).drop(p =>
+        p.startsWith(snaps) && !ctx.util().exists(new Path(p)))
       stale.size
     }
   }

@@ -1454,4 +1454,182 @@ class SnapshotsSpec extends SparkSpec {
     assert(e2.getMessage.contains("diverges"),
       s"expected the type-divergence error, got: ${e2.getMessage}")
   }
+
+  // ---- the per-session metadata cache ------------------------------
+
+  private def idV(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"))).toSeq.sorted
+
+  /** 4 range-clustered files over `ids`, stats and a bloom on `id`. */
+  private def commitIdV(dir: String, ids: Range, mult: Long): Long =
+    Snapshots.commit(spark,
+      ids.map(i => (i.toLong, i * mult)).toDF("id", "v")
+        .repartitionByRange(4, col("id")),
+      dir, statsColumns = Seq("id"), bloomColumns = Seq("id"))
+
+  test("metadata cache: an expired and vacuumed version is never served") {
+    val dir = Files.createTempDirectory("graft-snap-cache-expire").toString
+    commitIdV(dir, 0 until 40, 1L)
+    commitIdV(dir, 0 until 40, 2L)
+    commitIdV(dir, 0 until 40, 3L)
+    // every read path decodes and caches version 1
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 7L, v = 1L)) == Seq((7L, 7L)))
+    assert(idV(Snapshots.readRange(spark, dir, "id", 3L, 4L, v = 1L)) ==
+      Seq((3L, 3L), (4L, 4L)))
+    assert(Snapshots.readVersion(spark, dir, 1L).count() == 40L)
+    assert(Snapshots.metaCached(spark, dir, 1L))
+
+    assert(Snapshots.expire(spark, dir, keepLast = 1) == Seq(1L, 2L))
+    Snapshots.vacuum(spark, dir, olderThanMs = 0L)
+    assert(!Snapshots.metaCached(spark, dir, 1L) && !Snapshots.metaCached(spark, dir, 2L))
+    intercept[java.io.FileNotFoundException](Snapshots.readVersion(spark, dir, 1L))
+    intercept[java.io.FileNotFoundException](
+      Snapshots.readPoint(spark, dir, "id", 7L, v = 1L))
+    intercept[java.io.FileNotFoundException](
+      Snapshots.readRange(spark, dir, "id", 3L, 4L, v = 2L))
+    intercept[java.io.FileNotFoundException](
+      Snapshots.selectFilesPoint(spark, dir, 1L, "id", 7L))
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 7L)) == Seq((7L, 21L)))
+  }
+
+  test("metadata cache: a table deleted and recommitted at the same path reads the new rows") {
+    val dir = Files.createTempDirectory("graft-snap-cache-recommit").toString
+    assert(commitIdV(dir, 0 until 40, 1L) == 1L)
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 9L)) == Seq((9L, 9L)))
+    assert(idV(Snapshots.readRange(spark, dir, "id", 38L, 50L)) ==
+      Seq((38L, 38L), (39L, 39L)))
+    assert(Snapshots.readVersion(spark, dir, 1L).count() == 40L)
+
+    val hp = new org.apache.hadoop.fs.Path(dir)
+    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    // same path, same version number, different rows and files
+    assert(commitIdV(dir, 30 until 60, 5L) == 1L)
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 9L)).isEmpty)
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 45L)) == Seq((45L, 225L)))
+    assert(idV(Snapshots.readRange(spark, dir, "id", 38L, 39L)) ==
+      Seq((38L, 190L), (39L, 195L)))
+    assert(idV(Snapshots.readVersion(spark, dir, 1L)) ==
+      (30 until 60).map(i => (i.toLong, i * 5L)))
+    val (files, total) = Snapshots.selectFiles(spark, dir, 1L, "id", 0L, 100L)
+    assert(total >= 1L && files.size.toLong == total)
+  }
+
+  test("metadata cache: a version read before and after a commit keeps its own rows") {
+    val dir = Files.createTempDirectory("graft-snap-cache-versions").toString
+    commitIdV(dir, 0 until 40, 1L)
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 5L)) == Seq((5L, 5L)))
+    val v2 = Snapshots.merge(spark, dir, Seq((5L, -5L), (100L, -100L)).toDF("id", "v"),
+      Seq("id"), statsColumns = Seq("id"), bloomColumns = Seq("id"), scoped = true)
+    assert(v2 == 2L)
+    // the tip moved: a default read resolves v2, time travel keeps v1
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 5L)) == Seq((5L, -5L)))
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 100L)) == Seq((100L, -100L)))
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 5L, v = 1L)) == Seq((5L, 5L)))
+    assert(idV(Snapshots.readPoint(spark, dir, "id", 100L, v = 1L)).isEmpty)
+    assert(idV(Snapshots.readRange(spark, dir, "id", 4L, 5L, v = 1L)) ==
+      Seq((4L, 4L), (5L, 5L)))
+    assert(idV(Snapshots.readRange(spark, dir, "id", 4L, 5L)) ==
+      Seq((4L, 4L), (5L, -5L)))
+    assert(Snapshots.readVersion(spark, dir, 1L).count() == 40L)
+    assert(Snapshots.readVersion(spark, dir, 2L).count() == 41L)
+  }
+
+  test("driver-side probe hash equals the xxhash64 job hash, Int literal on a Long column included") {
+    import org.apache.spark.sql.types._
+    val day = java.time.LocalDate.of(2024, 1, 2)
+    val cases: Seq[(Any, DataType)] = Seq(
+      (42L, LongType), (42, LongType), (-7, IntegerType), (7L, IntegerType),
+      ("k-17", StringType), (17, StringType), (java.sql.Date.valueOf(day), DateType),
+      (day, DateType), ("2024-01-02", DateType))
+    for (ansi <- Seq("true", "false")) {
+      val prev = spark.conf.getOption("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try cases.foreach { case (value, t) =>
+        val job = spark.range(1).select(xxhash64(lit(value).cast(t))).head().getLong(0)
+        assert(Snapshots.probeHash(spark, value, t) == job, s"$value as $t, ansi=$ansi")
+      } finally prev match {
+        case Some(p) => spark.conf.set("spark.sql.ansi.enabled", p)
+        case None => spark.conf.unset("spark.sql.ansi.enabled")
+      }
+    }
+    // end to end: each bloom column finds its row (no false negative),
+    // and an Int literal probes a Long bloom column correctly
+    val dir = Files.createTempDirectory("graft-snap-hash-types").toString
+    val rows = (0 until 64).map(i =>
+      (i.toLong, i, s"k-$i", java.sql.Date.valueOf(day.plusDays(i.toLong))))
+    Snapshots.commit(spark, rows.toDF("l", "i", "s", "d").repartition(4), dir,
+      bloomColumns = Seq("l", "i", "s", "d"))
+    def hit(c: String, value: Any): Seq[Long] =
+      Snapshots.readPoint(spark, dir, c, value).collect().map(_.getAs[Long]("l")).toSeq
+    assert(hit("l", 17L) == Seq(17L) && hit("l", 17) == Seq(17L))
+    assert(hit("i", 17) == Seq(17L))
+    assert(hit("s", "k-17") == Seq(17L))
+    assert(hit("d", day.plusDays(17)) == Seq(17L))
+  }
+
+  test("conf slice: cached snapshot reads answer alike under ANSI on/off and the java8 datetime API") {
+    val dir = Files.createTempDirectory("graft-snap-conf-slice").toString
+    val day0 = java.time.LocalDate.of(2024, 3, 1)
+    val data = (0 until 60).map(i =>
+      (i.toLong, java.sql.Date.valueOf(day0.plusDays(i.toLong)), s"r$i"))
+      .toDF("id", "d", "s").repartitionByRange(6, col("d"))
+    val v = Snapshots.commit(spark, data, dir,
+      statsColumns = Seq("d", "id"), bloomColumns = Seq("d", "id"))
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect().map(_.getAs[Long]("id")).toSeq.sorted
+    def reads(): Seq[Seq[Long]] = Seq(
+      ids(Snapshots.readRange(spark, dir, "d", day0.plusDays(10), day0.plusDays(12))),
+      ids(Snapshots.readPoint(spark, dir, "d", day0.plusDays(33))),
+      ids(Snapshots.readPoint(spark, dir, "id", 44L, v = v)),
+      ids(Snapshots.readRange(spark, dir, "id", 58L, 70L)))
+    val want = Seq(Seq(10L, 11L, 12L), Seq(33L), Seq(44L), Seq(58L, 59L))
+    assert(reads() == want)
+    val cells = Seq(
+      "spark.sql.ansi.enabled" -> "true",
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.datetime.java8API.enabled" -> "true")
+    for ((key, value) <- cells) {
+      val prev = spark.conf.getOption(key)
+      // the same cached version read before and after the flip
+      assert(reads() == want, s"before $key=$value")
+      spark.conf.set(key, value)
+      try assert(reads() == want, s"$key=$value")
+      finally prev match {
+        case Some(p) => spark.conf.set(key, p)
+        case None => spark.conf.unset(key)
+      }
+      assert(reads() == want, s"after $key=$value")
+    }
+    assert(Snapshots.metaCached(spark, dir, v))
+  }
+
+  test("merge keys past the byte bound take the shuffled shape with the same result") {
+    val cap = Snapshots.LocalSidecarBytesConf
+    val ups = spark.range(0, 300).select(col("id"), (col("id") * -1).as("v"))
+    assert(Snapshots.localKeyFrame(spark, ups, Seq("id")).isDefined)
+    // a batch whose plan aggregates is not probed at all
+    assert(Snapshots.localKeyFrame(spark,
+      ups.groupBy("id").agg(max("v").as("v")), Seq("id")).isEmpty)
+    def mergeInto(bytesMax: Option[String]): Seq[(Long, Long)] = {
+      val dir = Files.createTempDirectory("graft-snap-keybytes").toString
+      commitIdV(dir, 0 until 400, 1L)
+      val prev = spark.conf.getOption(cap)
+      bytesMax.foreach(spark.conf.set(cap, _))
+      try {
+        // 300 Long keys ≈ 2.4 KB: over a 1 KB bound, under the default
+        assert(Snapshots.localKeyFrame(spark, ups, Seq("id")).isDefined == bytesMax.isEmpty)
+        Snapshots.merge(spark, dir, ups, Seq("id"),
+          statsColumns = Seq("id"), bloomColumns = Seq("id"), scoped = true,
+          recordChanges = true)
+      } finally prev match {
+        case Some(p) => spark.conf.set(cap, p)
+        case None => spark.conf.unset(cap)
+      }
+      idV(Snapshots.read(spark, dir))
+    }
+    val local = mergeInto(None)
+    val shuffled = mergeInto(Some("1024"))
+    assert(shuffled == local)
+    assert(local == (0 until 400).map(i => (i.toLong, if (i < 300) -i.toLong else i.toLong)))
+  }
 }
