@@ -17,24 +17,12 @@ object GraftShims {
     * `Dataset.ofRows` private[sql]). Needed by the manifest-pruned scan,
     * which plans a file source over a custom
     * [[org.apache.spark.sql.execution.datasources.FileIndex]] instead of
-    * round-tripping a selected-path list through `spark.read.parquet`.
+    * round-tripping a selected-path list through `spark.read.parquet`,
+    * and by the driver-side sidecar reads, which present decoded
+    * `InternalRow`s as a LocalRelation.
     */
   def ofRows(
       spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** InternalRow → external Row for a known schema — lets driver-side
-    * metadata fast paths (sidecar reads/writes that never touch the
-    * cluster) evaluate an already-local logical plan without a Spark
-    * job. `CatalystTypeConverters` is private[sql]; this is the one
-    * conversion the fast paths need.
-    */
-  def toExternalRows(
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Seq[Row] = {
-    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(schema)
-    rows.map(r => conv(r).asInstanceOf[Row])
-  }
 }

@@ -57,7 +57,10 @@ import org.apache.spark.sql.functions._
   * what `graft.sidecar.localBytesMax` lets the driver decode, holds
   * manifest rows only for single-leaf manifests (a two-level manifest
   * keeps its root-list pruning), and is bounded in bytes with LRU
-  * eviction.
+  * eviction. Its rows are the `UnsafeRow`s Spark's own parquet codec
+  * decodes: small flat sidecars are read and written on the driver
+  * with the same codec Spark's jobs use for the big ones, so a sidecar
+  * is one file format and one row form whichever path touched it.
   */
 object Snapshots {
 
@@ -290,26 +293,21 @@ object Snapshots {
     val ctx = fc(spark)
     val dir = manifestDir(stageDir)
     val build = s"$stageDir/_manifest_build"
-    // r17: a manifest whose rows are already driver-resident (footer
-    // fast-path own rows unioned with a locally read carried manifest
-    // — the scoped-merge/append shape) writes its single leaf with
-    // parquet-mr directly: zero Spark jobs instead of the
-    // coalesce(1)-write round-trip. Multi-leaf layouts keep the
-    // distributed writer (they need the range clustering + `_root`).
-    locally {
-      val perLeaf0 = spark.conf.getOption(ManifestRowsPerLeafConf)
-        .map(_.toInt).getOrElse(ManifestRowsPerLeafDefault)
-      localPlanRows(m) match {
-        case Some(rows) if rows.size <= perLeaf0 &&
-            writeSidecarLocal(spark, nullableSchema(m.schema), rows,
-              new Path(dir)) =>
-          return
-        case _ => ()
-      }
-    }
-    m.coalesce(1).write.mode("overwrite").parquet(build)
     val perLeaf = spark.conf.getOption(ManifestRowsPerLeafConf)
       .map(_.toInt).getOrElse(ManifestRowsPerLeafDefault)
+    // a manifest whose rows are already driver-resident (footer stats
+    // rows, possibly unioned with a locally read carried manifest — the
+    // scoped-merge/append shape) writes its single leaf driver-side:
+    // zero Spark jobs instead of the coalesce(1)-write round-trip.
+    // Multi-leaf layouts keep the distributed writer (they need the
+    // range clustering + `_root`).
+    localWritableRows(m).filter(_.size <= perLeaf) match {
+      case Some(rows) =>
+        writeLocal(spark, nullableSchema(m.schema), rows, dir)
+        return
+      case None =>
+    }
+    m.coalesce(1).write.mode("overwrite").parquet(build)
     // row count from the single build file's FOOTER, driver-side — the
     // leaf-count decision needs only n, and a Spark count() job (plus
     // the footer-inference job of an unschema'd read-back) was two of
@@ -410,17 +408,10 @@ object Snapshots {
   private def manifestTotal(spark: SparkSession, snapDir: String): Long = {
     val rootP = new Path(s"${manifestDir(snapDir)}/_root")
     if (fc(spark).util().exists(rootP))
-      readSidecarLocal(spark, rootP.toString) match {
-        case Some(df) =>
-          val i = df.schema.fieldIndex("n_files")
-          df.collect().iterator
-            .map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).sum
-        case None => spark.read.parquet(rootP.toString)
-          .agg(sum("n_files")).head().getLong(0)
-      }
-    else readSidecarLocal(spark, manifestDir(snapDir)) match {
-      case Some(df) => df.collect().length.toLong
-      case None => spark.read.parquet(manifestDir(snapDir)).count()
+      longSum(readSidecar(spark, rootP.toString), "n_files").getOrElse(0L)
+    else {
+      val leaf = readSidecar(spark, manifestDir(snapDir))
+      localPlanRows(leaf).map(_.size.toLong).getOrElse(leaf.count())
     }
   }
 
@@ -545,22 +536,22 @@ object Snapshots {
       spark: SparkSession, snapDir: String): Option[ColMap] =
     columnMapDfAt(spark, snapDir).map(fromMapDf)
 
-  private def fromMapDf(df: DataFrame): ColMap =
-    fromMapRows(df.columns.toSeq, df.collect().toSeq)
-
-  /** [[ColMap]] of a `_column_map` sidecar's rows (any order). */
-  private def fromMapRows(
-      columns: Seq[String], unordered: Seq[org.apache.spark.sql.Row]): ColMap = {
-    // positional access: decoded sidecar rows carry no schema
+  /** [[ColMap]] of a `_column_map` sidecar frame's rows (any order). */
+  private def fromMapDf(df: DataFrame): ColMap = {
+    val columns = df.columns.toSeq
     val pos = columns.indexOf("pos")
     val lgI = columns.indexOf("logical")
     val phI = columns.indexOf("physical")
     val drI = columns.indexOf("dropped")
     val wtI = columns.indexOf("read_type")
-    val rows = unordered.sortBy(_.getAs[Number](pos).longValue).map { r =>
+    val posType = df.schema(pos).dataType
+    val unordered = localPlanRows(df)
+      .getOrElse(df.queryExecution.executedPlan.executeCollect().toSeq)
+    val rows = unordered.sortBy(_.get(pos, posType).asInstanceOf[Number].longValue).map { r =>
       val dr = drI >= 0 && !r.isNullAt(drI) && r.getBoolean(drI)
-      val wt = if (wtI < 0 || r.isNullAt(wtI)) None else Some(r.getString(wtI))
-      (r.getString(lgI), r.getString(phI), dr, wt)
+      val wt =
+        if (wtI < 0 || r.isNullAt(wtI)) None else Some(r.getUTF8String(wtI).toString)
+      (r.getUTF8String(lgI).toString, r.getUTF8String(phI).toString, dr, wt)
     }
     ColMap(
       rows.collect { case (lg, ph, false, _) => (lg, ph) },
@@ -957,10 +948,9 @@ object Snapshots {
       spark: SparkSession,
       stageDir: String,
       stagedSchema: org.apache.spark.sql.types.StructType,
-      statsColumns: Seq[String])
-      : Option[(org.apache.spark.sql.types.StructType,
-        Seq[org.apache.spark.sql.Row])] = {
+      statsColumns: Seq[String]): Option[DataFrame] = {
     import org.apache.spark.sql.types.{IntegerType => IntT, LongType => LongT, StringType => StrT}
+    import org.apache.spark.unsafe.types.UTF8String
     val typeOf = stagedSchema.map(f => f.name -> f.dataType).toMap
     val supported = statsColumns.forall(c => typeOf.get(c).exists {
       case StrT | LongT | IntT => true
@@ -973,7 +963,8 @@ object Snapshots {
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }.toSeq.sortBy(_.getPath.getName)
-    val rows = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]
+    val rows = new scala.collection.mutable.ArrayBuffer[
+      org.apache.spark.sql.catalyst.InternalRow]
     for (st <- files) {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromStatus(st, conf)
@@ -985,7 +976,7 @@ object Snapshots {
       val nRows = blocks.map(_.getRowCount).sum
       if (nRows > 0) {
         val vals = new scala.collection.mutable.ArrayBuffer[Any]
-        vals += st.getPath.getName
+        vals += UTF8String.fromString(st.getPath.getName)
         vals += nRows
         for (c <- statsColumns) {
           var mn: AnyRef = null
@@ -1013,9 +1004,8 @@ object Snapshots {
           def conv(v: AnyRef): Any =
             if (v == null) null
             else typeOf(c) match {
-              case StrT => v
-                .asInstanceOf[org.apache.parquet.io.api.Binary]
-                .toStringUsingUTF8
+              case StrT => UTF8String.fromBytes(
+                v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
               case _ => v
             }
           vals += conv(mn)
@@ -1023,7 +1013,8 @@ object Snapshots {
           vals += nulls
         }
         vals += st.getLen
-        rows += org.apache.spark.sql.Row.fromSeq(vals.toSeq)
+        rows += new org.apache.spark.sql.catalyst.expressions
+          .GenericInternalRow(vals.toArray)
       }
     }
     import org.apache.spark.sql.types.{StructField, StructType}
@@ -1034,71 +1025,10 @@ object Snapshots {
         StructField(s"max_$c", typeOf(c)),
         StructField(s"nulls_$c", LongT))) :+
       StructField("size_bytes", LongT)
-    Some((StructType(fields), rows.toSeq))
+    Some(localFrame(spark, StructType(fields), rows.toSeq))
   }
 
-  /** Driver-side single-leaf manifest write for the footer fast path:
-    * the manifest rows already live on the driver (O(commit's own
-    * files) by construction), so round-tripping them through a
-    * `coalesce(1).write.parquet` Spark job only pays ~0.15 s of
-    * scheduling per commit (measured: `commit(stats)` 0.41 s/2 jobs →
-    * 0.25 s/1 job with this path). The rows are written with
-    * parquet-mr's Group API under exactly the physical types Spark's
-    * own writer would produce (BINARY/UTF8, INT64, INT32 — the fast
-    * path admits only String/Long/Int stats columns plus the fixed
-    * file/n_rows/nulls/size longs), so `spark.read.parquet` infers the
-    * identical schema and every manifest consumer is none the wiser.
-    * Single-leaf semantics match [[writeManifest]]'s small branch: one
-    * data file, no `_root` (a one-leaf root prunes nothing).
-    */
-  private def writeManifestLocal(
-      spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row],
-      stageDir: String): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.io.api.Binary
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types => PTypes}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.spark.sql.types.{IntegerType => IntT, LongType => LongT, StringType => StrT}
-    val b0: PTypes.GroupBuilder[org.apache.parquet.schema.MessageType] =
-      PTypes.buildMessage()
-    val msg = schema.fields.foldLeft(b0) { (b, f) =>
-      f.dataType match {
-        case StrT => b.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case LongT => b.optional(PrimitiveTypeName.INT64).named(f.name)
-        case IntT => b.optional(PrimitiveTypeName.INT32).named(f.name)
-        case other => throw new IllegalStateException(
-          s"writeManifestLocal on unsupported type $other for ${f.name} " +
-            "— the footer fast path admits String/Long/Int only")
-      }
-    }.named("manifest")
-    val dir = new Path(manifestDir(stageDir))
-    fc(spark).mkdir(dir, null, true)
-    val writer = ExampleParquetWriter
-      .builder(new Path(dir, "part-00000-driver.snappy.parquet"))
-      .withConf(spark.sessionState.newHadoopConf())
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withType(msg).build()
-    val gf = new SimpleGroupFactory(msg)
-    try rows.foreach { r =>
-      val g = gf.newGroup()
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (!r.isNullAt(i)) f.dataType match {
-          case StrT => g.append(f.name, Binary.fromString(r.getString(i)))
-          case LongT => g.append(f.name, r.getLong(i))
-          case IntT => g.append(f.name, r.getInt(i))
-          case _ => () // unreachable: gated above
-        }
-      }
-      writer.write(g)
-    } finally writer.close()
-  }
-
-  // ---- driver-local sidecar parquet I/O (r17) -------------------------
+  // ---- driver-local sidecar parquet I/O -------------------------------
   //
   // The METADATA PLANE must not ride the cluster: every `spark.read
   // .parquet` of a KB-sized sidecar pays a footer-sampling inference
@@ -1108,9 +1038,15 @@ object Snapshots {
   // scale a cluster round-trip on the commit/refresh critical path.
   // Real formats read and write their manifests driver-side (Iceberg's
   // manifest I/O is plain parquet-mr) for exactly this reason. These
-  // helpers do the same for the engine's small flat sidecars, with the
-  // Spark path kept as the fallback for anything big or exotic —
-  // never a different answer, only a cheaper derivation of it.
+  // helpers do the same for the engine's small flat sidecars, with ONE
+  // codec for both paths: Spark's own parquet row codec. The driver
+  // writes through the record writer `ParquetUtils.prepareWrite` sets
+  // up for Spark's write tasks, and reads through `ParquetReadSupport`
+  // under the session's schema-converter flags and rebase modes, as
+  // Spark's scan does. A sidecar file is therefore the same file
+  // whichever path wrote it, and rows stay `InternalRow`s end to end.
+  // The Spark job path is kept as the fallback for anything big or
+  // non-flat — never a different answer, only a cheaper derivation.
 
   /** Size guard for driver-side sidecar reads: beyond this many bytes
     * the Spark reader keeps the job (a delete set or a carried manifest
@@ -1120,107 +1056,58 @@ object Snapshots {
   private[sources] val LocalSidecarBytesConf = "graft.sidecar.localBytesMax"
   private val LocalSidecarBytesDefault: Long = 8L << 20
 
-  import org.apache.spark.sql.types.{DataType => SqlType,
-    BooleanType => BoolT, ByteType => ByteT, ShortType => ShortT,
-    IntegerType => IntT2, LongType => LongT2, FloatType => FloatT,
-    DoubleType => DoubleT, StringType => StrT2, BinaryType => BinT,
-    DateType => DateT, TimestampType => TsT}
-
-  /** Flat parquet field → Spark type for the shapes the engine's own
-    * writers produce; None on repeated/nested/exotic fields (caller
-    * falls back to the Spark reader).
-    */
-  private def sidecarFieldType(
-      f: org.apache.parquet.schema.Type): Option[SqlType] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    if (!f.isPrimitive ||
-        f.getRepetition == org.apache.parquet.schema.Type.Repetition.REPEATED)
-      return None
-    val p = f.asPrimitiveType()
-    val ann = p.getLogicalTypeAnnotation
-    p.getPrimitiveTypeName match {
-      case BOOLEAN => Some(BoolT)
-      case FLOAT => Some(FloatT)
-      case DOUBLE => Some(DoubleT)
-      case INT32 => ann match {
-        case null => Some(IntT2)
-        case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation => Some(DateT)
-        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-            if i.isSigned && i.getBitWidth == 8 => Some(ByteT)
-        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-            if i.isSigned && i.getBitWidth == 16 => Some(ShortT)
-        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-            if i.isSigned && i.getBitWidth == 32 => Some(IntT2)
-        case _ => None
-      }
-      case INT64 => ann match {
-        case null => Some(LongT2)
-        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
-            if i.isSigned && i.getBitWidth == 64 => Some(LongT2)
-        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-            if t.isAdjustedToUTC &&
-              (t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS ||
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS) =>
-          Some(TsT)
-        case _ => None
-      }
-      case INT96 => Some(TsT)
-      case BINARY => ann match {
-        case null => Some(BinT)
-        case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => Some(StrT2)
-        case _ => None
-      }
-      case _ => None
-    }
+  /** Whether every column is of a flat type the driver-side path takes;
+    * anything else (nested, decimal, interval, NTZ, …) keeps Spark's
+    * reader and writer jobs. */
+  private def localCodecAdmits(
+      schema: org.apache.spark.sql.types.StructType): Boolean = {
+    import org.apache.spark.sql.types._
+    schema.fields.forall(_.dataType match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType |
+          FloatType | DoubleType | StringType | BinaryType | DateType |
+          TimestampType => true
+      case _ => false
+    })
   }
 
-  private def micTs(micros: Long): java.sql.Timestamp = {
-    val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-    ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-    ts
-  }
-
-  /** Decoded rows of a small flat sidecar directory, as plain values:
-    * what [[readSidecarRows]] returns and the metadata cache holds.
-    */
-  private final case class SidecarRows(
+  /** Driver-resident rows as a LocalRelation: zero Spark jobs to plan
+    * or collect, and a join side that broadcasts without an exchange. */
+  private def localFrame(
+      spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      rows: IndexedSeq[org.apache.spark.sql.Row]) {
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): DataFrame =
+    org.apache.spark.sql.GraftShims.ofRows(spark,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+        rows))
 
-    /** The rows as a LocalRelation: zero Spark jobs to plan or collect. */
-    def toDF(spark: SparkSession): DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        schema)
+  /** Decoded rows of a small flat sidecar directory: what
+    * [[readSidecarRows]] returns and the metadata cache holds. */
+  private[sources] final case class SidecarRows(
+      schema: org.apache.spark.sql.types.StructType,
+      rows: IndexedSeq[org.apache.spark.sql.catalyst.expressions.UnsafeRow]) {
 
-    /** Approximate decoded heap size, for the cache's byte bound. */
-    lazy val bytes: Long = rows.iterator.map { r =>
-      64L + r.toSeq.iterator.map {
-        case b: Array[Byte] => 24L + b.length
-        case s: String => 48L + 2L * s.length
-        case _ => 16L
-      }.sum
-    }.sum
+    def toDF(spark: SparkSession): DataFrame = localFrame(spark, schema, rows)
+
+    /** The rows' exact byte size, for the cache's byte bound. */
+    lazy val bytes: Long = rows.iterator.map(_.getSizeInBytes.toLong).sum
   }
 
-  /** Driver-side read of a small flat parquet directory into a LOCAL
-    * relation: zero Spark jobs — no footer-sampling inference job, no
-    * collect job for driver-bound consumers, and a LocalRelation join
-    * side broadcasts without an exchange. None when the directory
-    * exceeds the size guard, holds no data file, or any column is
-    * non-flat; mixed per-file schemas also fall back.
+  /** Driver-side read of a small flat parquet directory, each footer
+    * opened once. None when the directory exceeds the size guard, holds
+    * no data file, has a column [[localCodecAdmits]] refuses, or mixes
+    * per-file schemas — the caller then keeps the Spark reader.
     */
-  private def readSidecarLocal(
-      spark: SparkSession, dir: String): Option[DataFrame] =
-    readSidecarRows(spark, dir).map(_.toDF(spark))
-
-  /** [[readSidecarLocal]]'s decode, returning the plain rows. */
-  private def readSidecarRows(
+  private[sources] def readSidecarRows(
       spark: SparkSession, dir: String): Option[SidecarRows] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.api.InitContext
+    import org.apache.parquet.io.ColumnIOFactory
+    import org.apache.spark.sql.execution.datasources.DataSourceUtils
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions,
+      ParquetReadSupport, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.internal.SQLConf
     val ctx = fc(spark)
     val dirP = new Path(dir)
     if (!ctx.util().exists(dirP)) return None
@@ -1230,83 +1117,49 @@ object Snapshots {
     }.toSeq.sortBy(_.getPath.getName)
     if (files.isEmpty) return None
     if (files.map(_.getLen).sum > localSidecarBytes(spark)) return None
+    val sqlConf = spark.sessionState.conf
     val conf = spark.sessionState.newHadoopConf()
+    // the flags Spark's scan hands its schema converter
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
+      SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
+      .foreach(e => conf.setBoolean(e.key, sqlConf.getConf(e)))
+    val options = new ParquetOptions(Map.empty[String, String], sqlConf)
+    var fileSchema: org.apache.parquet.schema.MessageType = null
     var schema: org.apache.spark.sql.types.StructType = null
-    var msgStr: String = null
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]
+    var toUnsafe: org.apache.spark.sql.catalyst.expressions.UnsafeProjection = null
+    val out = new scala.collection.mutable.ArrayBuffer[
+      org.apache.spark.sql.catalyst.expressions.UnsafeRow]
     for (st <- files) {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-      val footer = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter finally r.close()
-      }
-      val msg = footer.getFileMetaData.getSchema
-      if (msgStr == null) {
-        msgStr = msg.toString
-        val fields = new scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.types.StructField]
-        scala.jdk.CollectionConverters.ListHasAsScala(msg.getFields).asScala
-          .foreach { f =>
-            sidecarFieldType(f) match {
-              case Some(t) => fields +=
-                org.apache.spark.sql.types.StructField(f.getName, t)
-              case None => return None
-            }
-          }
-        schema = org.apache.spark.sql.types.StructType(fields.toSeq)
-      } else if (msgStr != msg.toString) return None
-      val reader = org.apache.parquet.hadoop.ParquetReader.builder(
-        new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
-        .withConf(conf).build()
+      val reader = ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
       try {
-        var g = reader.read()
-        while (g != null) {
-          val vals = new Array[Any](schema.length)
-          var i = 0
-          while (i < schema.length) {
-            if (g.getFieldRepetitionCount(i) == 0) vals(i) = null
-            else {
-              val pf = msg.getFields.get(i).asPrimitiveType()
-              val ann = pf.getLogicalTypeAnnotation
-              vals(i) = pf.getPrimitiveTypeName match {
-                case PrimitiveTypeName.BOOLEAN => g.getBoolean(i, 0)
-                case PrimitiveTypeName.FLOAT => g.getFloat(i, 0)
-                case PrimitiveTypeName.DOUBLE => g.getDouble(i, 0)
-                case PrimitiveTypeName.INT32 => schema(i).dataType match {
-                  case DateT => java.sql.Date.valueOf(
-                    java.time.LocalDate.ofEpochDay(g.getInteger(i, 0).toLong))
-                  case ByteT => g.getInteger(i, 0).toByte
-                  case ShortT => g.getInteger(i, 0).toShort
-                  case _ => g.getInteger(i, 0)
-                }
-                case PrimitiveTypeName.INT64 => schema(i).dataType match {
-                  case TsT =>
-                    val t = ann.asInstanceOf[
-                      LogicalTypeAnnotation.TimestampLogicalTypeAnnotation]
-                    val v = g.getLong(i, 0)
-                    micTs(if (t.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS)
-                      Math.multiplyExact(v, 1000L) else v)
-                  case _ => g.getLong(i, 0)
-                }
-                case PrimitiveTypeName.INT96 =>
-                  val b = g.getInt96(i, 0).getBytes
-                  val bb = java.nio.ByteBuffer.wrap(b)
-                    .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                  val nanosOfDay = bb.getLong
-                  val julianDay = bb.getInt
-                  micTs((julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L)
-                case PrimitiveTypeName.BINARY => schema(i).dataType match {
-                  case StrT2 => g.getBinary(i, 0).toStringUsingUTF8
-                  case _ => g.getBinary(i, 0).getBytes
-                }
-                case _ => return None // unreachable: gated in sidecarFieldType
-              }
-            }
-            i += 1
-          }
-          out += org.apache.spark.sql.Row.fromSeq(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
-          g = reader.read()
+        val meta = reader.getFooter.getFileMetaData
+        if (fileSchema == null) {
+          fileSchema = meta.getSchema
+          schema = new ParquetToSparkSchemaConverter(conf).convert(fileSchema)
+          if (!localCodecAdmits(schema)) return None
+          conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+          toUnsafe = org.apache.spark.sql.catalyst.expressions
+            .UnsafeProjection.create(schema)
+        } else if (meta.getSchema != fileSchema) return None
+        val kv = meta.getKeyValueMetaData
+        val support = new ParquetReadSupport(None, false,
+          DataSourceUtils.datetimeRebaseSpec(kv.get, options.datetimeRebaseModeInRead),
+          DataSourceUtils.int96RebaseSpec(kv.get, options.int96RebaseModeInRead))
+        val read = support.init(new InitContext(conf,
+          java.util.Collections.emptyMap[String, java.util.Set[String]](), fileSchema))
+        val materializer = support.prepareForRead(conf, kv, fileSchema, read)
+        val columns = new ColumnIOFactory(meta.getCreatedBy)
+          .getColumnIO(read.getRequestedSchema, fileSchema, true)
+        reader.setRequestedSchema(read.getRequestedSchema)
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records = columns.getRecordReader(pages, materializer, FilterCompat.NOOP)
+          for (_ <- 0L until pages.getRowCount) out += toUnsafe(records.read()).copy()
+          pages = reader.readNextRowGroup()
         }
       } finally reader.close()
     }
@@ -1318,11 +1171,15 @@ object Snapshots {
       .map(_.toLong).getOrElse(LocalSidecarBytesDefault)
 
   /** A sidecar directory as a DataFrame: driver-local when small and
-    * flat, the Spark reader otherwise. Drop-in for
-    * `spark.read.parquet(dir)` on sidecar paths.
+    * flat, the Spark reader (under `schema` when given) otherwise.
+    * Drop-in for `spark.read.parquet(dir)` on sidecar paths.
     */
-  private def readSidecar(spark: SparkSession, dir: String): DataFrame =
-    readSidecarLocal(spark, dir).getOrElse(spark.read.parquet(dir))
+  private[sources] def readSidecar(
+      spark: SparkSession,
+      dir: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    readSidecarRows(spark, dir).map(_.toDF(spark)).getOrElse(
+      schema.fold(spark.read)(spark.read.schema(_)).parquet(dir))
 
   /** Rows of an already-driver-resident logical plan — a LocalRelation
     * or a union of them (scoped-merge refs and carried manifests fold
@@ -1330,7 +1187,7 @@ object Snapshots {
     * Spark jobs. None on any plan that might touch the cluster.
     */
   private[sources] def localPlanRows(df: DataFrame)
-      : Option[Seq[org.apache.spark.sql.Row]] = {
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
     def walk(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
         : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = p match {
@@ -1340,105 +1197,64 @@ object Snapshots {
         if (parts.forall(_.nonEmpty)) Some(parts.flatMap(_.get)) else None
       case _ => None
     }
-    walk(df.queryExecution.optimizedPlan).map(rows =>
-      org.apache.spark.sql.GraftShims.toExternalRows(
-        nullableSchema(df.schema), rows))
+    walk(df.queryExecution.optimizedPlan)
   }
 
-  /** Driver-side parquet write of locally known rows — the write half
-    * of the fast path, generalizing [[writeManifestLocal]]'s type set.
-    * Returns false (wrote nothing) on an unsupported type; the caller
-    * keeps the Spark writer. Values land under the same logical types
-    * the Spark writer declares for these Spark types (strings as
-    * BINARY/UTF8, timestamps as INT64 micros UTC-adjusted, dates as
-    * INT32/date), so `spark.read.parquet` round-trips identically.
-    */
-  private def writeSidecarLocal(
-      spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row],
-      destDir: Path,
-      fileName: String = null): Boolean = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.io.api.Binary
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types => PTypes}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val b0: PTypes.GroupBuilder[org.apache.parquet.schema.MessageType] =
-      PTypes.buildMessage()
-    val msgOpt = schema.fields.foldLeft(
-      Option(b0)) { (bOpt, f) =>
-      bOpt.flatMap { b =>
-        f.dataType match {
-          case StrT2 => Some(b.optional(PrimitiveTypeName.BINARY)
-            .as(LogicalTypeAnnotation.stringType()).named(f.name))
-          case BinT => Some(b.optional(PrimitiveTypeName.BINARY).named(f.name))
-          case LongT2 => Some(b.optional(PrimitiveTypeName.INT64).named(f.name))
-          case IntT2 => Some(b.optional(PrimitiveTypeName.INT32).named(f.name))
-          case BoolT => Some(b.optional(PrimitiveTypeName.BOOLEAN).named(f.name))
-          case FloatT => Some(b.optional(PrimitiveTypeName.FLOAT).named(f.name))
-          case DoubleT => Some(b.optional(PrimitiveTypeName.DOUBLE).named(f.name))
-          case DateT => Some(b.optional(PrimitiveTypeName.INT32)
-            .as(LogicalTypeAnnotation.dateType()).named(f.name))
-          case TsT => Some(b.optional(PrimitiveTypeName.INT64)
-            .as(LogicalTypeAnnotation.timestampType(true,
-              LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name))
-          case _ => None
-        }
-      }
-    }
-    val msg = msgOpt match {
-      case Some(m) => m.named("sidecar")
-      case None => return false
-    }
-    val ctx = fc(spark)
-    ctx.mkdir(destDir, null, true)
-    val name =
-      if (fileName != null) fileName
-      else s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet"
-    val writer = ExampleParquetWriter
-      .builder(new Path(destDir, name))
-      .withConf(spark.sessionState.newHadoopConf())
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withType(msg).build()
-    val gf = new SimpleGroupFactory(msg)
-    try rows.foreach { r =>
-      val g = gf.newGroup()
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (!r.isNullAt(i)) f.dataType match {
-          case StrT2 => g.append(f.name, Binary.fromString(r.getString(i)))
-          case BinT => g.append(f.name,
-            Binary.fromConstantByteArray(r.getAs[Array[Byte]](i)))
-          case LongT2 => g.append(f.name, r.getLong(i))
-          case IntT2 => g.append(f.name, r.getInt(i))
-          case BoolT => g.append(f.name, r.getBoolean(i))
-          case FloatT => g.append(f.name, r.getFloat(i))
-          case DoubleT => g.append(f.name, r.getDouble(i))
-          case DateT => g.append(f.name,
-            r.getAs[java.sql.Date](i).toLocalDate.toEpochDay.toInt)
-          case TsT =>
-            val ts = r.getAs[java.sql.Timestamp](i)
-            g.append(f.name,
-              Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L)
-          case _ => () // unreachable: gated above
-        }
-      }
-      writer.write(g)
-    } finally writer.close()
-    true
-  }
-
-  /** Write a small driver-resident frame as a one-file parquet sidecar
-    * without a Spark job, when the plan is provably local and the
-    * types serialize; false → caller falls back to the Spark writer.
-    */
-  private def trySidecarLocalWrite(
-      spark: SparkSession, df: DataFrame, destDir: Path): Boolean =
+  /** Sum of a Long column, None when every value is null (or there is
+    * no row): on the driver for a local plan, one Spark job otherwise. */
+  private def longSum(df: DataFrame, c: String): Option[Long] =
     localPlanRows(df) match {
       case Some(rows) =>
-        writeSidecarLocal(spark, nullableSchema(df.schema), rows, destDir)
-      case None => false
+        val i = df.schema.fieldIndex(c)
+        val vs = rows.filterNot(_.isNullAt(i)).map(_.getLong(i))
+        if (vs.isEmpty) None else Some(vs.sum)
+      case None =>
+        Option(df.agg(sum(c)).head().get(0)).map(_.asInstanceOf[Long])
+    }
+
+  /** A frame's rows the driver-side writer can take: a local plan of
+    * columns [[localCodecAdmits]] accepts. */
+  private[sources] def localWritableRows(df: DataFrame)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    if (localCodecAdmits(df.schema)) localPlanRows(df) else None
+
+  /** Driver-side write of `rows` as one parquet file in `dir`, through
+    * the record writer Spark's own write tasks open: the Hadoop conf is
+    * prepared by `ParquetUtils.prepareWrite` from the session conf
+    * (timestamp type, rebase modes, compression, write support), so the
+    * file is the one Spark's writer would produce for the same rows.
+    */
+  private[sources] def writeLocal(
+      spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      dir: String): Unit = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val sqlConf = spark.sessionState.conf
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val name =
+      s"part-00000-${java.util.UUID.randomUUID()}${factory.getFileExtension(task)}"
+    val writer = factory.newInstance(new Path(dir, name).toString, schema, task)
+    try rows.foreach(writer.write) finally writer.close()
+  }
+
+  /** Publish `df` as a sidecar directory: driver-side when its rows are
+    * already local and flat ([[localWritableRows]]), else with Spark's
+    * writer — coalesced to one file, or as-is when `coalesce` is false
+    * (delete sets and change feeds can be executor-sized).
+    */
+  private[sources] def writeSidecar(
+      spark: SparkSession, df: DataFrame, dir: String,
+      coalesce: Boolean = true): Unit =
+    localWritableRows(df) match {
+      case Some(rows) => writeLocal(spark, nullableSchema(df.schema), rows, dir)
+      case None =>
+        (if (coalesce) df.coalesce(1) else df).write.mode("overwrite").parquet(dir)
     }
 
   // ---- end driver-local sidecar I/O ----------------------------------
@@ -1562,10 +1378,7 @@ object Snapshots {
     val snapDir = dir.toString
     val map =
       if (!names(ColumnMapName)) None
-      else Some(readSidecarRows(spark, s"$snapDir/$ColumnMapName") match {
-        case Some(s) => fromMapRows(s.schema.fieldNames.toSeq, s.rows)
-        case None => fromMapDf(spark.read.parquet(s"$snapDir/$ColumnMapName"))
-      })
+      else Some(fromMapDf(readSidecar(spark, s"$snapDir/$ColumnMapName")))
     val hasManifest = names("_manifest")
     VersionMeta(
       map = map,
@@ -1657,19 +1470,13 @@ object Snapshots {
       else df.repartition(
         spark.sessionState.conf.numShufflePartitions,
         partitionSpec.map(t => t(col(t.column))): _*)
-    // r17: tiny driver-resident commits (params tables, version
-    // manifests, limit(0) truncations — all optimizer-folded to a
-    // LocalRelation) write their one data file with parquet-mr, no
-    // Spark job; everything cluster-sized keeps the Spark writer.
-    val wroteLocal = !sidecars.pureReference && partitionSpec.isEmpty &&
-      (localPlanRows(clustered) match {
-        case Some(rows) =>
-          writeSidecarLocal(spark, nullableSchema(clustered.schema), rows,
-            new Path(stageDir))
-        case None => false
-      })
-    if (!wroteLocal)
-      clustered.write.mode("overwrite").parquet(stageDir)
+    // tiny driver-resident commits (params tables, version manifests,
+    // limit(0) truncations — all optimizer-folded to a LocalRelation)
+    // write their one data file driver-side, no Spark job; everything
+    // cluster-sized keeps the Spark writer.
+    if (!sidecars.pureReference && partitionSpec.isEmpty)
+      writeSidecar(spark, clustered, stageDir, coalesce = false)
+    else clustered.write.mode("overwrite").parquet(stageDir)
     // the staged files' schema, known WITHOUT a footer-sampling job:
     // every read-back below (stats, expectation check) passes it
     // explicitly — at ~50 ms per inference job this is a measurable
@@ -1697,11 +1504,7 @@ object Snapshots {
           (id, i, kind, t.column, param, id == currentSpecId)
         }
       }.toDF("spec_id", "pos", "kind", "column", "param", "is_default")
-      // driver-resident rows: write the sidecar without a Spark job
-      if (!trySidecarLocalWrite(spark, specDf,
-          new Path(s"$stageDir/_partition_spec")))
-        specDf.coalesce(1)
-          .write.mode("overwrite").parquet(s"$stageDir/_partition_spec")
+      writeSidecar(spark, specDf, s"$stageDir/_partition_spec")
     }
     // commit timestamp, published by the same atomic claim as the data
     // (timestamp time travel resolves against THIS, not file mtimes —
@@ -1756,10 +1559,7 @@ object Snapshots {
       // and keeps this commit-point gate as the backstop.
       import spark.implicits._
       val expDf = expectations.toDF("name", "expr")
-      if (!trySidecarLocalWrite(spark, expDf,
-          new Path(s"$stageDir/_expectations")))
-        expDf.coalesce(1)
-          .write.mode("overwrite").parquet(s"$stageDir/_expectations")
+      writeSidecar(spark, expDf, s"$stageDir/_expectations")
       val checks = expectations.map { case (n, e) =>
         sum(when(coalesce(expr(e), lit(true)) === false, 1L).otherwise(0L)).as(n)
       }
@@ -1806,11 +1606,7 @@ object Snapshots {
       val fastStats =
         if (bloomColumns.nonEmpty || specSet.nonEmpty) None
         else footerOwnStats(spark, stageDir, stagedSchema, statsColumns)
-      val own0 = fastStats.map { case (sch, rows) =>
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), sch)
-      }.getOrElse {
+      val own0 = fastStats.getOrElse {
       val data = spark.read.schema(stagedSchema).parquet(stageDir)
       val aggs: Seq[Column] = (count(lit(1)).as("n_rows") +:
         (statsColumns.flatMap(c =>
@@ -1889,18 +1685,10 @@ object Snapshots {
             u.withColumn("spec_id", coalesce(col("spec_id"), lit(0)))
           else u
         }
-      val perLeaf = spark.conf.getOption(ManifestRowsPerLeafConf)
-        .map(_.toInt).getOrElse(ManifestRowsPerLeafDefault)
-      fastStats match {
-        // pure fast-path shape (driver rows, nothing carried, fits one
-        // leaf): write the single-leaf manifest driver-side — zero
-        // Spark jobs. Beyond one leaf [[writeManifest]] must cluster
-        // and publish a `_root`, so the distributed path keeps it.
-        case Some((sch, rows))
-            if sidecars.carriedManifest.isEmpty && rows.size <= perLeaf =>
-          writeManifestLocal(spark, sch, rows, stageDir)
-        case _ => writeManifest(spark, full, stageDir)
-      }
+      // footer-fast-path rows (with any locally read carried rows)
+      // stay a local plan, so a one-leaf manifest is written
+      // driver-side by [[writeManifest]] — zero Spark jobs
+      writeManifest(spark, full, stageDir)
     } else sidecars.carriedManifest.foreach { c =>
       // a pure-reference commit (merge-on-read delete) with no manifest
       // config of its own still re-publishes the carried stats verbatim.
@@ -1920,12 +1708,7 @@ object Snapshots {
     }
     // the column map this snapshot publishes (rename-without-rewrite):
     // tiny, rides the same atomic claim as everything else
-    sidecars.columnMap.foreach { cm =>
-      if (!trySidecarLocalWrite(spark, cm,
-          new Path(s"$stageDir/$ColumnMapName")))
-        cm.coalesce(1)
-          .write.mode("overwrite").parquet(s"$stageDir/$ColumnMapName")
-    }
+    sidecars.columnMap.foreach(writeSidecar(spark, _, s"$stageDir/$ColumnMapName"))
     // write-time CDF: the change rows this commit applies, published by
     // the same atomic claim as the data (underscore dir → hidden from
     // data scans), so feed and snapshot can never disagree. Stored
@@ -1936,35 +1719,22 @@ object Snapshots {
     // unmap would mis-rename a physical column).
     sidecars.changes
       .map(c => if (sidecars.pureReference) c else unmapToPhysical(c, mapPairs))
-      .foreach { ch =>
-        if (!trySidecarLocalWrite(spark, ch, new Path(s"$stageDir/_changes")))
-          ch.write.mode("overwrite").parquet(s"$stageDir/_changes")
-      }
+      .foreach(writeSidecar(spark, _, s"$stageDir/_changes", coalesce = false))
     // merge-on-read delete set: key rows readers must anti-join away
     // (physical names — the anti-join runs against raw file scans; the
     // producer [[deleteMergeOnRead]] normalizes its own fresh keys, so
     // every morDeletes frame reaching here is physical already).
     // Deliberately NOT coalesced — a 100 TB table's delete batch can be
     // executor-sized even when the commit writes no data files.
-    sidecars.morDeletes.foreach { md =>
-      if (!trySidecarLocalWrite(spark, md,
-          new Path(s"$stageDir/_mor_deletes")))
-        md.write.mode("overwrite").parquet(s"$stageDir/_mor_deletes")
-    }
+    sidecars.morDeletes.foreach(
+      writeSidecar(spark, _, s"$stageDir/_mor_deletes", coalesce = false))
     // positional delete set: (file, idx) coordinates of superseded base
     // rows — the deletion-vector form that stays correct under
     // accumulation because positions are scoped to a single immutable file
-    sidecars.posDeletes.foreach { pd =>
-      if (!trySidecarLocalWrite(spark, pd,
-          new Path(s"$stageDir/_pos_deletes")))
-        pd.write.mode("overwrite").parquet(s"$stageDir/_pos_deletes")
-    }
-    sidecars.refs.foreach { r =>
-      val paths = r.select(col("path"))
-      if (!trySidecarLocalWrite(spark, paths, new Path(s"$stageDir/_refs")))
-        paths.coalesce(1)
-          .write.mode("overwrite").parquet(s"$stageDir/_refs")
-    }
+    sidecars.posDeletes.foreach(
+      writeSidecar(spark, _, s"$stageDir/_pos_deletes", coalesce = false))
+    sidecars.refs.foreach(r =>
+      writeSidecar(spark, r.select(col("path")), s"$stageDir/_refs"))
     new Path(stageDir)
   }
 
@@ -2496,15 +2266,7 @@ object Snapshots {
             if (ctx.util().exists(rootP)) readSidecar(spark, rootP.toString)
             else readSidecar(spark, manifestDir(snapDir))
           if (!src.columns.contains("n_rows")) None
-          else localPlanRows(src) match {
-            // driver-resident manifest: sum without a Spark job
-            case Some(rows) =>
-              val i = src.schema.fieldIndex("n_rows")
-              val vs = rows.filterNot(_.isNullAt(i)).map(_.getLong(i))
-              if (vs.isEmpty) None else Some(vs.sum)
-            case None => Option(src.agg(sum("n_rows")).head().get(0))
-              .map(_.asInstanceOf[Long])
-          }
+          else longSum(src, "n_rows")
         }
       (v, ts, nFiles, nRows)
     }.toDF("version", "commit_ms", "n_files", "n_rows")
@@ -2811,8 +2573,8 @@ object Snapshots {
         m.rows.filter(r =>
           // a null sketch means a zero-row file: nothing to contain
           !r.isNullAt(bi) && graft.functions.BloomFunctions
-            .mightContainSerialized(r.getAs[Array[Byte]](bi), hashed))
-          .map(r => (r.getString(fi),
+            .mightContainSerialized(r.getBinary(bi), hashed))
+          .map(r => (r.getUTF8String(fi).toString,
             if (si < 0 || r.isNullAt(si)) None else Some(r.getLong(si))))
       case None =>
         val probed = bloomProbe(spark, s"$tableDir/snap-$v", bloom, hashed)
@@ -4667,13 +4429,10 @@ object Snapshots {
           org.apache.spark.sql.types.StructField("change_type",
             org.apache.spark.sql.types.StringType) +: ds.fields)
       }
-      // r17: small feed sidecars read driver-side (LocalRelation) —
-      // the whole window then folds locally, windowKinds needs no job,
-      // and delta applications broadcast without an exchange
-      readSidecarLocal(spark, p)
-        .getOrElse(sch.map(spark.read.schema(_)).getOrElse(spark.read)
-          .parquet(p))
-        .withColumn("version", lit(v))
+      // small feed sidecars read driver-side (LocalRelation) — the
+      // whole window then folds locally, windowKinds needs no job, and
+      // delta applications broadcast without an exchange
+      readSidecar(spark, p, sch).withColumn("version", lit(v))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     // feed rows are stored physical (like the data); present under the
     // window-end version's logical names — change_type/version pass

@@ -873,14 +873,14 @@ object Views {
     * (kinds distinct + update-version distinct) — collect_set keeps
     * the result window-version-sized, never row-sized. */
   private def windowKinds(feed: DataFrame): Map[String, Seq[Long]] =
-    // r17: a window whose feed sidecars were read driver-side folds to
+    // a window whose feed sidecars were read driver-side folds to
     // a local plan — classify on the driver, zero jobs; the Spark
     // aggregation stays the fallback for executor-sized feeds
     Snapshots.localPlanRows(feed) match {
       case Some(rows) =>
         val ct = feed.schema.fieldIndex("change_type")
         val vi = feed.schema.fieldIndex("version")
-        rows.groupBy(_.getString(ct)).map { case (k, rs) =>
+        rows.groupBy(_.getUTF8String(ct).toString).map { case (k, rs) =>
           k -> rs.map(_.getLong(vi)).distinct.sorted }.toMap
       case None =>
         feed.groupBy("change_type")
