@@ -52,14 +52,20 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *    turning "incremental equals recompute" from a theorem into a
   *    tolerance. Integer deltas keep it exact — the DuckDB oracle
   *    replays the full recompute and the hashes must match.
-  *  - Refresh commits through [[Snapshots.commitIfVersion]] (CAS):
-  *    racing refreshes re-read and re-derive, so every committed view
-  *    version is the delta application to its immediate predecessor —
-  *    a lost update would silently double- or under-count.
-  *  - [[streamRefreshView]] maintains the view from
-  *    [[Snapshots.changesStream]] under `foreachBatch`: deltas are
-  *    additive so any micro-batch split yields the same state
-  *    (batch-invariance), `version > applied` filtering makes a fresh
+  *  - ONE fold per view kind ([[foldView]], [[foldJoinView]]) applies
+  *    a feed window, whatever produced it — the DBSP incremental
+  *    operator is the same whether its input delta comes from a batch
+  *    window or a stream. The fold routes the window, then commits
+  *    through [[Snapshots.commitIfVersion]] (CAS): racing folds re-read
+  *    and re-derive, so every committed view version is the delta
+  *    application to its immediate predecessor — a lost update would
+  *    silently double- or under-count.
+  *  - The entry points only build the window. [[refreshView]] reads
+  *    [[Snapshots.changesFeed]] over `(applied, tip]`;
+  *    [[streamRefreshView]] takes each `foreachBatch` micro-batch of
+  *    [[Snapshots.changesStream]] past `applied`. Deltas are additive,
+  *    so any micro-batch split yields the same state
+  *    (batch-invariance); `version > applied` filtering makes a fresh
   *    checkpoint safe against re-reading already-applied versions, and
   *    the sentinel's `_mv_batch_id` makes a replayed batch (the
   *    at-least-once window after a commit-then-crash) a no-op —
@@ -68,6 +74,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 object Views {
 
   private val MetaCols = Seq("_mv_src_version", "_mv_batch_id")
+  private val JoinMetaCols =
+    Seq("_mv_srcl_version", "_mv_srcr_version", "_mv_batch_id")
 
   private def dropMeta(df: DataFrame): DataFrame =
     df.drop(df.columns.filter(_.startsWith("_mv_")).toIndexedSeq: _*)
@@ -533,8 +541,7 @@ object Views {
 
   private def withMeta(spark: SparkSession, rows: DataFrame, d: MvDef,
       srcV: Long, batchId: Long): DataFrame =
-    withMetaCols(spark, rows, d,
-      Seq("_mv_src_version" -> srcV, "_mv_batch_id" -> batchId))
+    withMetaCols(spark, rows, d, MetaCols.zip(Seq(srcV, batchId)))
 
   /** Materialize `SELECT groupCols, COUNT(*), SUM(sumCols…),
     * MIN(minCols…), MAX(maxCols…) FROM src GROUP BY groupCols` at the
@@ -741,19 +748,13 @@ object Views {
   /** The source version the view currently reflects. */
   def appliedSrcVersion(spark: SparkSession, viewDir: String): Long = {
     val v = Snapshots.version(spark, viewDir)
-    noteMeta(spark, viewDir, v, 2).map(_.head)
-      .getOrElse(sentinelMeta(Snapshots.readVersion(spark, viewDir, v))._1)
+    appliedMeta(spark, viewDir, v, Snapshots.readVersion(spark, viewDir, v),
+      MetaCols).head
   }
 
   /** How many source commits the view is behind. */
   def staleness(spark: SparkSession, srcDir: String, viewDir: String): Long =
     Snapshots.version(spark, srcDir) - appliedSrcVersion(spark, viewDir)
-
-  private def sentinelMeta(mv: DataFrame): (Long, Long) = {
-    val row = mv.filter(col("n_rows") === 0)
-      .select("_mv_src_version", "_mv_batch_id").head()
-    (row.getLong(0), row.getLong(1))
-  }
 
   /** The sentinel meta duplicated as a `_mv_meta` note sidecar (r16
     * optimization): every refresh/stream fold used to pay one Spark
@@ -804,12 +805,20 @@ object Views {
           p.getAs[String]("join_keys").split(",").toSeq)
     }
 
-  private def noteMeta(
-      spark: SparkSession, tableDir: String, v: Long,
-      n: Int): Option[Seq[Long]] =
+  /** The bookkeeping values (`cols`, in order) that view version `v`
+    * of `tableDir` committed: its `_mv_meta` note, or the sentinel row
+    * `mv` where the version has no note (a [[compactView]] rewrite). */
+  private def appliedMeta(
+      spark: SparkSession, tableDir: String, v: Long, mv: => DataFrame,
+      cols: Seq[String]): Seq[Long] =
     Snapshots.noteAt(spark, tableDir, v, MvMetaNote)
       .map(_.trim.split(",").map(_.toLong).toSeq)
-      .filter(_.length == n)
+      .filter(_.length == cols.length)
+      .getOrElse {
+        val row = mv.filter(col("n_rows") === 0)
+          .select(cols.map(col): _*).head()
+        cols.indices.map(row.getLong)
+      }
 
   /** Null-safe equi-join condition on the group columns (a NULL group
     * key is a legitimate group — a plain equi-join would orphan it).
@@ -853,21 +862,6 @@ object Views {
         "preImages = true or merge on a key that pins them")
   }
 
-  /** [[upsertDetermined]] upgraded with GROUND TRUTH: since r16 every
-    * post-only `recordChanges` merge records the key it actually used
-    * (`Snapshots.recordedUpdateKey`, the `_update_key` sidecar), so
-    * for each window version carrying `update` rows the contract is
-    * checked against the RECORDED key — a declaration claiming more
-    * than the merge pinned is caught loudly instead of trusted.
-    * Feeds predating the sidecar fall back to the declared key (the
-    * original trust boundary, now confined to legacy commits). The
-    * declaration stays the OPT-IN either way: with none, the refusal
-    * is byte-for-byte the undeclared one — classification (and this
-    * check) are never paid on the undeclared fast path. `vers` is the
-    * update-bearing version list from the window's ONE classification
-    * action ([[windowKinds]]); `presentAt` is the window-end version
-    * under whose logical names the recorded key is presented
-    * (rename-proof, like the feed itself). */
   /** ONE action over a window's feed: the change kinds mapped to the
     * versions that carried them. Replaces the former pair of jobs
     * (kinds distinct + update-version distinct) — collect_set keeps
@@ -891,6 +885,21 @@ object Views {
           .toMap
     }
 
+  /** [[upsertDetermined]] upgraded with GROUND TRUTH: since r16 every
+    * post-only `recordChanges` merge records the key it actually used
+    * (`Snapshots.recordedUpdateKey`, the `_update_key` sidecar), so
+    * for each window version carrying `update` rows the contract is
+    * checked against the RECORDED key — a declaration claiming more
+    * than the merge pinned is caught loudly instead of trusted.
+    * Feeds predating the sidecar fall back to the declared key (the
+    * original trust boundary, now confined to legacy commits). The
+    * declaration stays the OPT-IN either way: with none, the refusal
+    * is byte-for-byte the undeclared one — classification (and this
+    * check) are never paid on the undeclared fast path. `vers` is the
+    * update-bearing version list from the window's ONE classification
+    * action ([[windowKinds]]); `presentAt` is the window-end version
+    * under whose logical names the recorded key is presented
+    * (rename-proof, like the feed itself). */
   private def upsertWindowVerified(
       spark: SparkSession, srcDir: String, vers: Seq[Long],
       declared: Seq[String], needed: Seq[String], what: String,
@@ -1252,110 +1261,97 @@ object Views {
     untouched.unionByName(recomputed)
   }
 
-  /** Bring the view up to the source's current version by applying the
-    * recorded change feed over the stale window — pure delta for
-    * count/sum views (no source read at all), touched-group rescan when
-    * the view carries min/max. No-op (current view version returned)
-    * when already fresh. Commits via CAS with re-derive, so concurrent
-    * refreshes and a refresh racing a source writer both stay
-    * serializable. Every data-changing source commit inside the window
-    * must have recorded its feed (`recordChanges = true`, merges with
-    * `preImages = true` for the delta path) — [[Snapshots.changesFeed]]
-    * throws on a gap rather than silently under-applying.
+  /** The one maintenance fold of a single-table view: apply a feed
+    * window to the view's tip and commit through CAS, re-deriving on a
+    * lost race. `window` maps the tip's (applied source version, last
+    * stream batch id) to the window to fold: its feed rows (shaped like
+    * [[Snapshots.changesFeed]]: `change_type`, the source columns,
+    * `version`), the source version they reach, and the batch id to
+    * record; None means there is nothing to fold. Routing: pure delta
+    * for delta-invertible views and for insert-only windows of
+    * min/max/HLL views (inserts only extend them, zero source reads);
+    * the touched-group rescan for windows with retractions, and for
+    * post-only `update` rows once [[upsertWindowVerified]] accepts the
+    * declared key. A pure-delta view with no declared key skips the
+    * classification ([[applyDeltas]] itself refuses `update` rows).
+    * Returns the view version holding the window, None when every
+    * attempt lost its race. */
+  private def foldView(spark: SparkSession, srcDir: String,
+      viewDir: String, retries: Int, upsertKey: Seq[String], what: String)(
+      window: (Long, Long) => Option[(DataFrame, Long, Long)])
+      : Option[Long] = retried(retries) {
+    val base = Snapshots.version(spark, viewDir)
+    require(base >= 1, s"no committed view in $viewDir")
+    val mv = Snapshots.readVersion(spark, viewDir, base)
+    val d = parseDef(mv.drop(MetaCols: _*))
+    val Seq(applied, lastBatch) =
+      appliedMeta(spark, viewDir, base, mv, MetaCols)
+    window(applied, lastBatch).fold(Option(base)) { case (feed, tip, batchId) =>
+      val aggRows = mv.filter(col("n_rows") > 0).drop(MetaCols: _*)
+      val kindVers =
+        if (d.hasRescanAggs || upsertKey.nonEmpty) windowKinds(feed)
+        else Map.empty[String, Seq[Long]]
+      kindVers.get("update").foreach(vers => upsertWindowVerified(spark,
+        srcDir, vers, upsertKey, d.groupCols, what, tip))
+      val delta =
+        if (d.hasRescanAggs) kindVers.keySet.subsetOf(Set("insert"))
+        else !kindVers.contains("update")
+      // the rescan's source read is bounded by the touched groups' key
+      // envelope (null-safe: a NULL touched key falls back to full)
+      val next =
+        if (delta) applyDeltas(aggRows, feed, d)
+        else rescanTouched(aggRows, feed, readMatching(spark, srcDir, tip,
+          feed, d.groupCols, nullSafe = true), d)
+      Snapshots.commitIfVersion(spark, withMeta(spark, next, d, tip, batchId),
+        viewDir, base, statsColumns = d.groupCols,
+        notes = metaNote(tip, batchId))
+    }
+  }
+
+  /** Run one CAS attempt (None: it lost the race) until one commits or
+    * `retries` attempts have lost. */
+  private def retried(retries: Int)(attempt: => Option[Long]): Option[Long] =
+    Iterator.fill(retries)(attempt).collectFirst { case Some(v) => v }
+
+  /** Bring the view up to the source's current version: [[foldView]]
+    * over the window `(applied, tip]` of [[Snapshots.changesFeed]]. A
+    * no-op (current view version returned) when already fresh. Every
+    * data-changing source commit inside the window must have recorded
+    * its feed (`recordChanges = true`; merges with `preImages = true`,
+    * or an `upsertKey` the rescan can verify) — the feed throws on a
+    * gap rather than silently under-applying. The stream's last batch
+    * id is carried forward, so a maintainer stream's replay guard holds
+    * across interleaved batch refreshes.
     */
   def refreshView(
       spark: SparkSession,
       srcDir: String,
       viewDir: String,
       maxRetries: Int = 10,
-      upsertKey: Seq[String] = Nil): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = Snapshots.version(spark, viewDir)
-      require(base >= 1, s"no committed view in $viewDir")
-      val mv = Snapshots.readVersion(spark, viewDir, base)
-      val d = parseDef(mv.drop(MetaCols: _*))
-      val (applied, lastBatch) = noteMeta(spark, viewDir, base, 2)
-        .map(s => (s(0), s(1))).getOrElse(sentinelMeta(mv))
-      val tip = Snapshots.version(spark, srcDir)
-      require(tip >= applied,
-        s"source $srcDir is at $tip, behind the view's applied $applied " +
-          "(restored source? rebuild the view)")
-      if (tip == applied) return base
-      val aggRows = mv.filter(col("n_rows") > 0).drop(MetaCols: _*)
-      val feed = Snapshots.changesFeed(spark, srcDir, applied, tip)
-      // classify the window (one O(|distinct change kinds|) action) —
-      // paid only when routing can depend on it: a rescan-agg view
-      // always needs it (INSERT-ONLY windows keep min/max on the pure
-      // delta path — inserts only EXTEND extrema — so the append-only
-      // cadence refreshes with ZERO source reads), and a declared
-      // upsert contract needs it to spot `update` rows before the
-      // delta fold meets them. A pure-delta view with no declared
-      // key keeps its classification-free fast path (applyDeltas
-      // itself refuses `update` rows at evaluation).
-      val kindVers =
-        if (d.hasRescanAggs || upsertKey.nonEmpty) windowKinds(feed)
-        else Map.empty[String, Seq[Long]]
-      val kinds = kindVers.keySet
-      val next =
-        if (kinds.contains("update")) {
-          // post-only `update` rows: digestible ONLY under the
-          // declared upsert contract ([[upsertWindowVerified]] — the
-          // merge key, RECORDED ground truth where available, must
-          // pin every group column, so the post-image names the
-          // hidden pre-image's group); then the touched-group rescan
-          // recomputes from the tip exactly as it does for deletes —
-          // sound for EVERY aggregate family, delta-invertible or
-          // not, because the rescan never inverts.
-          upsertWindowVerified(spark, srcDir, kindVers("update"),
-            upsertKey, d.groupCols, "view refresh", tip)
-          rescanTouched(aggRows, feed,
-            readMatching(spark, srcDir, tip, feed, d.groupCols,
-              nullSafe = true), d)
-        } else if (!d.hasRescanAggs) applyDeltas(aggRows, feed, d)
-        else if (kinds.subsetOf(Set("insert")))
-          applyDeltas(aggRows, feed, d)
-        else {
-          // the rescan's source read is bounded by the touched
-          // groups' key envelope: on a source clustered by the group
-          // columns it reads O(touched files), not O(table)
-          // (null-safe — a NULL touched key falls back to full)
-          rescanTouched(aggRows, feed,
-            readMatching(spark, srcDir, tip, feed, d.groupCols,
-              nullSafe = true), d)
-        }
-      // carry the sentinel's streaming batch id through batch commits
-      // (mirrors refreshJoinView): a -1 reset would weaken the replay
-      // guard for any maintainer stream interleaved with batch
-      // refreshes, should the version>applied filter ever loosen
-      Snapshots.commitIfVersion(spark,
-        withMeta(spark, next, d, tip, lastBatch),
-        viewDir, base, statsColumns = d.groupCols,
-        notes = metaNote(tip, lastBatch)) match {
-        case Some(v) => return v
-        case None => attempt += 1
-      }
-    }
-    throw new IllegalStateException(
-      s"view refresh on $viewDir lost $maxRetries optimistic races; giving up")
-  }
+      upsertKey: Seq[String] = Nil): Long =
+    foldView(spark, srcDir, viewDir, maxRetries, upsertKey, "view refresh") {
+      (applied, lastBatch) =>
+        val tip = Snapshots.version(spark, srcDir)
+        require(tip >= applied,
+          s"source $srcDir is at $tip, behind the view's applied $applied " +
+            "(restored source? rebuild the view)")
+        if (tip == applied) None
+        else Some((Snapshots.changesFeed(spark, srcDir, applied, tip), tip,
+          lastBatch))
+    }.getOrElse(throw new IllegalStateException(
+      s"view refresh on $viewDir lost $maxRetries optimistic races; giving up"))
 
   /** Continuous maintenance: drain the source's write-time change feed
-    * through a checkpointed stream and fold each micro-batch into the
-    * view — GENERAL feeds: delta-invertible views (count/sum/
-    * quantile/var/cm) under any window; min/max/HLL views fold
-    * insert-only micro-batches as deltas and route retraction-bearing
-    * ones through the same touched-group rescan the batch refresh
-    * runs, with the tip pinned at the batch's window end (only
-    * post-only `update` rows refuse — record merges with
-    * `preImages = true`). Safe under every
-    * failure mode the file-source contract allows: versions already
-    * applied at view-create time are filtered (`version > applied`), a
-    * replayed micro-batch is detected by the sentinel's `_mv_batch_id`
-    * and skipped, and a maintainer racing a batch [[refreshView]] CASes
-    * through [[Snapshots.commitIfVersion]]. ONE maintainer stream per
-    * view: `_mv_batch_id` is only monotone within a single checkpoint's
-    * batch sequence, so a second stream on a different checkpoint would
+    * ([[Snapshots.changesStream]]) through a checkpointed stream, and
+    * fold each micro-batch with [[foldView]] — the window is the
+    * batch's rows past the applied version, ending at their highest
+    * version. Exactly-once under the file-source contract: versions
+    * already applied are filtered (`version > applied`), a replayed
+    * micro-batch (batch id at or below the recorded one — the
+    * at-least-once window after a commit-then-crash) folds nothing,
+    * and commits CAS against racing [[refreshView]] calls. ONE
+    * maintainer stream per view: batch ids are only monotone within a
+    * single checkpoint, so a second stream on another checkpoint would
     * read the first stream's ids as "already applied" and skip real
     * work (restarting the SAME checkpoint is fine — that is the replay
     * the guard exists for). Pass `Trigger.AvailableNow` for the
@@ -1382,30 +1378,56 @@ object Views {
       keepVersions: Int = 1,
       upsertKey: Seq[String] = Nil)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    Snapshots.changesStream(spark, srcDir).writeStream
+    maintainStream(spark, viewDir, Snapshots.changesStream(spark, srcDir),
+      checkpointDir, trigger, maintainEvery, keepVersions) { (batch, batchId) =>
+      foldView(spark, srcDir, viewDir, 10, upsertKey,
+        "streaming view maintenance") { (applied, lastBatch) =>
+        if (batchId <= lastBatch) None
+        else pastApplied(batch, applied).map { case (f, t) => (f, t, batchId) }
+      }.getOrElse(throw new IllegalStateException(
+        s"streaming view maintenance on $viewDir lost 10 optimistic races"))
+    }
+
+  /** A micro-batch's feed rows past `applied` and the highest version
+    * among them; None when it holds none. */
+  private def pastApplied(
+      rows: DataFrame, applied: Long): Option[(DataFrame, Long)] = {
+    val fresh = rows.filter(col("version") > applied)
+    val top = fresh.agg(max("version")).head()
+    if (top.isNullAt(0)) None else Some((fresh, top.getLong(0)))
+  }
+
+  /** Run a view maintainer stream: each micro-batch is pinned in memory
+    * while `onBatch` consumes it, then the retention cadence runs — every
+    * `maintainEvery` batches, bin-pack the tip and expire history,
+    * best-effort and after the batch's commit landed (a repair failure
+    * must never fail the fold; the next cadence point retries, and
+    * batch ids are monotone so the cadence survives restarts). */
+  private def maintainStream(spark: SparkSession, viewDir: String,
+      feed: DataFrame, checkpointDir: String,
+      trigger: org.apache.spark.sql.streaming.Trigger,
+      maintainEvery: Int, keepVersions: Int)(
+      onBatch: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    def repair(batchId: Long): Unit =
+      if (maintainEvery > 0 && batchId % maintainEvery == maintainEvery - 1)
+        try {
+          compactView(spark, viewDir)
+          expireView(spark, viewDir, keepVersions)
+        } catch {
+          case scala.util.control.NonFatal(_) => // retried next cadence
+        }
+    feed.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyStreamBatch(spark, viewDir, srcDir, batch, batchId, upsertKey)
-        maybeMaintain(spark, viewDir, batchId, maintainEvery, keepVersions)
+        batch.persist()
+        try onBatch(batch, batchId)
+        finally batch.unpersist()
+        repair(batchId)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
-
-  /** The streaming maintainers' retention cadence: every
-    * `maintainEvery` batches, bin-pack the tip and expire history —
-    * best-effort, after the batch's commit already landed (a repair
-    * failure must never fail the fold; the next cadence point
-    * retries, and batch ids are monotone so the cadence survives
-    * restarts). */
-  private def maybeMaintain(spark: SparkSession, viewDir: String,
-      batchId: Long, maintainEvery: Int, keepVersions: Int): Unit =
-    if (maintainEvery > 0 && batchId % maintainEvery == maintainEvery - 1)
-      try {
-        compactView(spark, viewDir)
-        expireView(spark, viewDir, keepVersions)
-      } catch {
-        case scala.util.control.NonFatal(_) => // retried next cadence
-      }
+  }
 
   // ---------- join views (append-only sources) ----------
   //
@@ -1525,9 +1547,7 @@ object Views {
       cntCols = (sumCols ++ varCols).distinct, topkCols = topkCols)
     val d = parseDef(rows)
     Snapshots.commit(spark,
-      withMetaCols(spark, rows, d,
-        Seq("_mv_srcl_version" -> vL, "_mv_srcr_version" -> vR,
-          "_mv_batch_id" -> -1L)),
+      withMetaCols(spark, rows, d, JoinMetaCols.zip(Seq(vL, vR, -1L))),
       s"$viewDir/rows", statsColumns = groupCols,
       notes = metaNote(vL, vR, -1L) :+
         paramsNote(leftDir, rightDir, joinKeys))
@@ -1544,8 +1564,8 @@ object Views {
     readView(spark, s"$viewDir/rows", asOf = asOf, withAvg = withAvg,
       quantiles = quantiles)
 
-  /** The touched-group RESCAN for a join view — shared by the batch
-    * refresh and the streaming maintainer's retraction route. Any
+  /** The touched-group RESCAN for a join view ([[foldJoinView]]'s
+    * route for windows with retractions). Any
     * group whose aggregate changed must contain a pair involving a
     * Δrow, and that pair is visible in Δside ⋈ the version of the
     * other side it paired with (deleted pairs in the OLD versions,
@@ -1625,152 +1645,129 @@ object Views {
     }
   }
 
-  /** Bring the join view up to both sources' current versions. The
-    * refresh classifies the stale window's feed rows (one tiny
-    * distinct per side) and picks the cheapest sound route:
+  /** The one maintenance fold of a join view, the join-view twin of
+    * [[foldView]]: `window` maps the tip's (applied left, applied
+    * right, last stream batch id) to the window to fold — per side,
+    * the feed rows past the applied version (shaped like
+    * [[Snapshots.changesFeed]], restricted to that side's columns;
+    * None for a side that did not move) and the version they reach,
+    * plus the batch id to record; None means nothing to fold. Each
+    * moved side's feed is classified (one tiny action per side) to
+    * pick the cheapest sound route:
     *
-    *  - ALL-INSERT feeds: the bilinear delta —
+    *  - ALL-INSERT windows: the bilinear delta —
     *    `Δ = agg(ΔL ⋈ R_new) + agg(L_old ⋈ ΔR)`, with `L_old`
-    *    time-traveled to the view's applied version. Two small joins,
-    *    no group recomputed, and each "other side" read manifest-pruned
-    *    to the delta's join-key envelope ([[readMatching]]).
-    *  - feeds with deletes or pre/post-imaged updates: TOUCHED-GROUP
-    *    RESCAN — the groups of every Δ-pair (each delta joined against
-    *    BOTH versions of the other side, a conservative superset)
-    *    recompute from the two tips behind a semi-join; untouched
-    *    groups carry over unread.
-    *  - post-only `update` rows: refused loudly (the retracted pair's
-    *    join key is unrecoverable) — record merges with
-    *    `preImages = true`.
+    *    time-traveled to the applied version. Two small joins, no group
+    *    recomputed, and each "other side" read manifest-pruned to the
+    *    delta's join-key envelope ([[readMatching]]).
+    *  - windows with deletes or pre/post-imaged updates: the
+    *    touched-group rescan ([[rescanJoinTouched]]).
+    *  - post-only `update` rows: validated PER SIDE — the side that
+    *    carried them must have a declared merge key pinning the join
+    *    keys and that side's RESIDENT group columns
+    *    ([[upsertWindowVerified]]); the post-image then finds the
+    *    hidden pre-image's pairs through the rescan's other-side
+    *    joins. Refused loudly otherwise.
     *
-    * Sources and definition come from the view's own params; commits
-    * via CAS like the single-table refresh. */
+    * Commits via CAS with re-derive; returns the rows version holding
+    * the window, None when every attempt lost its race. */
+  private def foldJoinView(spark: SparkSession, viewDir: String,
+      leftDir: String, rightDir: String, joinKeys: Seq[String],
+      retries: Int, upsertKeyLeft: Seq[String],
+      upsertKeyRight: Seq[String], what: String)(
+      window: (Long, Long, Long) => Option[
+        (Option[(DataFrame, Long)], Option[(DataFrame, Long)], Long)])
+      : Option[Long] = retried(retries) {
+    val rowsDir = s"$viewDir/rows"
+    val base = Snapshots.version(spark, rowsDir)
+    require(base >= 1, s"no committed join view in $viewDir")
+    val mv = Snapshots.readVersion(spark, rowsDir, base)
+    val d = parseDef(mv)
+    val Seq(aL, aR, lastBatch) =
+      appliedMeta(spark, rowsDir, base, mv, JoinMetaCols)
+    window(aL, aR, lastBatch).fold(Option(base)) { case (wL, wR, batchId) =>
+      val (tipL, tipR) = (wL.fold(aL)(_._2), wR.fold(aR)(_._2))
+      val aggRows = dropMeta(mv.filter(col("n_rows") > 0))
+      val kinds = Seq((wL, leftDir, upsertKeyLeft, "left"),
+        (wR, rightDir, upsertKeyRight, "right")).flatMap {
+        case (w, dir, key, side) => w.toSeq.flatMap { case (f, tip) =>
+          val kv = windowKinds(f)
+          kv.get("update").foreach(vers =>
+            upsertWindowVerified(spark, dir, vers, key,
+              (joinKeys ++ d.groupCols.filter(f.columns.contains)).distinct,
+              s"$what ($side side)", tip))
+          kv.keySet
+        }
+      }
+      val dL = wL.map(_._1.drop("change_type", "version"))
+      val dR = wR.map(_._1.drop("change_type", "version"))
+      val (next, touched) =
+        if (kinds.forall(_ == "insert")) {
+          val deltaRows = (dL.map(f => f.join(
+            readMatching(spark, rightDir, tipR, f, joinKeys), joinKeys)) ++
+            dR.map(f => readMatching(spark, leftDir, aL, f, joinKeys)
+              .join(f, joinKeys)))
+            .reduce(_ unionByName _)
+          // every delta row is an insert by construction
+          (applyDeltas(aggRows,
+            deltaRows.withColumn("change_type", lit("insert")), d), None)
+        } else {
+          val (nx, t) = rescanJoinTouched(spark, leftDir, rightDir,
+            joinKeys, d, aggRows, dL, dR, aL, tipL, aR, tipR)
+          (nx, Some(t))
+        }
+      try Snapshots.commitIfVersion(spark,
+        withMetaCols(spark, next, d,
+          JoinMetaCols.zip(Seq(tipL, tipR, batchId))),
+        rowsDir, base, statsColumns = d.groupCols,
+        notes = metaNote(tipL, tipR, batchId) :+
+          paramsNote(leftDir, rightDir, joinKeys))
+      finally touched.foreach(_.unpersist())
+    }
+  }
+
+  /** Bring the join view up to both sources' current versions:
+    * [[foldJoinView]] over each moved side's [[Snapshots.changesFeed]]
+    * window `(applied, tip]`. A no-op when both sides are fresh.
+    * Sources and definition come from the view's own params; the
+    * stream's last batch id is carried forward. */
   def refreshJoinView(
       spark: SparkSession,
       viewDir: String,
       maxRetries: Int = 10,
       upsertKeyLeft: Seq[String] = Nil,
       upsertKeyRight: Seq[String] = Nil): Long = {
-    val rowsDir = s"$viewDir/rows"
-    val (leftDir, rightDir, joinKeys) =
-      joinViewParams(spark, viewDir, Snapshots.version(spark, rowsDir))
-    var attempt = 0
-    var released: Option[DataFrame] = None
-    try while (attempt < maxRetries) {
-      val base = Snapshots.version(spark, rowsDir)
-      require(base >= 1, s"no committed join view in $viewDir")
-      val mv = Snapshots.readVersion(spark, rowsDir, base)
-      val d = parseDef(mv)
-      val (aL, aR, lastBatch) = noteMeta(spark, rowsDir, base, 3)
-        .map(s => (s(0), s(1), s(2))).getOrElse(joinSentinelMeta(mv))
-      val tipL = Snapshots.version(spark, leftDir)
-      val tipR = Snapshots.version(spark, rightDir)
-      require(tipL >= aL && tipR >= aR,
-        s"a join input moved backwards ($leftDir $tipL<$aL or " +
-          s"$rightDir $tipR<$aR): rebuild the view")
-      if (tipL == aL && tipR == aR) return base
-      val aggRows = dropMeta(mv.filter(col("n_rows") > 0))
-      val dLfeed =
-        if (tipL == aL) None
-        else Some(Snapshots.changesFeed(spark, leftDir, aL, tipL))
-      val dRfeed =
-        if (tipR == aR) None
-        else Some(Snapshots.changesFeed(spark, rightDir, aR, tipR))
-      // classify the window: one O(|distinct change kinds|) action per
-      // moved side — the price of picking the cheap route safely.
-      // `update` rows are validated PER SIDE: the side that carried
-      // them must have a declared merge key pinning the join keys and
-      // that side's RESIDENT group columns ([[upsertDetermined]] — the
-      // post-image then finds the hidden pre-image's pairs through the
-      // same other-side joins the delete route uses); the other
-      // side's contract is never consulted for rows it didn't carry.
-      val kvL = dLfeed.map(windowKinds).getOrElse(Map.empty)
-      val kvR = dRfeed.map(windowKinds).getOrElse(Map.empty)
-      val kinds = kvL.keySet ++ kvR.keySet
-      Seq((kvL, dLfeed, leftDir, tipL, upsertKeyLeft, "left"),
-        (kvR, dRfeed, rightDir, tipR, upsertKeyRight, "right")).foreach {
-        case (kv, f, dir, tip, key, side) =>
-          kv.get("update").foreach(vers =>
-            upsertWindowVerified(spark, dir, vers, key,
-              (joinKeys ++ d.groupCols.filter(
-                f.get.columns.contains)).distinct,
-              s"join-view refresh ($side side)", tip))
-      }
-      val dL = dLfeed.map(_.drop("change_type", "version"))
-      val dR = dRfeed.map(_.drop("change_type", "version"))
-      // every "delta ⋈ other side" term reads the other side through
-      // [[readMatching]]: the delta's join-key envelope prunes a
-      // key-clustered side to O(matching files) via its stats manifest
-      // (the plain scan remains the fallback — wider, never wrong)
-      val next =
-        if (kinds.subsetOf(Set("insert"))) {
-          val deltaRows = (dL.map(f => f.join(
-            readMatching(spark, rightDir, tipR, f, joinKeys), joinKeys)) ++
-            dR.map(f => readMatching(spark, leftDir, aL, f, joinKeys)
-              .join(f, joinKeys)))
-            .reduce(_ unionByName _)
-          // additive application reuses the single-table delta path:
-          // every delta row is an insert by construction
-          applyDeltas(aggRows,
-            deltaRows.withColumn("change_type", lit("insert")), d)
-        } else {
-          val (nx, t) = rescanJoinTouched(spark, leftDir, rightDir,
-            joinKeys, d, aggRows, dL, dR, aL, tipL, aR, tipR)
-          released = Some(t)
-          nx
-        }
-      val committed = Snapshots.commitIfVersion(spark,
-        withMetaCols(spark, next, d,
-          Seq("_mv_srcl_version" -> tipL, "_mv_srcr_version" -> tipR,
-            "_mv_batch_id" -> lastBatch)),
-        rowsDir, base, statsColumns = d.groupCols,
-        notes = metaNote(tipL, tipR, lastBatch) :+
-          paramsNote(leftDir, rightDir, joinKeys))
-      released.foreach(_.unpersist()); released = None
-      committed match {
-        case Some(v) => return v
-        case None => attempt += 1
-      }
-    }
-    // a throw mid-iteration must not leak the pinned frame
-    finally released.foreach(_.unpersist())
-    throw new IllegalStateException(
-      s"join-view refresh on $viewDir lost $maxRetries optimistic races")
-  }
-
-  /** (appliedLeft, appliedRight, lastStreamBatch) from the join view's
-    * sentinel; views created before the streaming guard lack the
-    * batch-id column and read as -1 (no batch folded yet). */
-  private def joinSentinelMeta(mv: DataFrame): (Long, Long, Long) = {
-    val hasBatch = mv.columns.contains("_mv_batch_id")
-    val cols =
-      if (hasBatch)
-        Seq("_mv_srcl_version", "_mv_srcr_version", "_mv_batch_id")
-      else Seq("_mv_srcl_version", "_mv_srcr_version")
-    val row = mv.filter(col("n_rows") === 0).select(cols.map(col): _*).head()
-    (row.getLong(0), row.getLong(1),
-      if (hasBatch) row.getLong(2) else -1L)
+    val (leftDir, rightDir, joinKeys) = joinViewParams(spark, viewDir,
+      Snapshots.version(spark, s"$viewDir/rows"))
+    foldJoinView(spark, viewDir, leftDir, rightDir, joinKeys, maxRetries,
+      upsertKeyLeft, upsertKeyRight, "join-view refresh") {
+      (aL, aR, lastBatch) =>
+        val tipL = Snapshots.version(spark, leftDir)
+        val tipR = Snapshots.version(spark, rightDir)
+        require(tipL >= aL && tipR >= aR,
+          s"a join input moved backwards ($leftDir $tipL<$aL or " +
+            s"$rightDir $tipR<$aR): rebuild the view")
+        def side(dir: String, a: Long, tip: Long) =
+          if (tip == a) None
+          else Some((Snapshots.changesFeed(spark, dir, a, tip), tip))
+        if (tipL == aL && tipR == aR) None
+        else Some((side(leftDir, aL, tipL), side(rightDir, aR, tipR),
+          lastBatch))
+    }.getOrElse(throw new IllegalStateException(
+      s"join-view refresh on $viewDir lost $maxRetries optimistic races"))
   }
 
   /** Continuous maintenance of a JOIN view: ONE maintainer drains BOTH
     * sources' write-time change feeds (side-tagged union of the two
     * [[Snapshots.changesStream]]s, one checkpoint) and folds each
-    * micro-batch with the bilinear rule — `ΔL ⋈ R(tR) + L(aL) ⋈ ΔR`,
-    * both "other side" terms pinned by time travel to the batch's own
-    * window ends and manifest-pruned to the delta's key envelope
-    * ([[readMatching]]). GENERAL feeds: all-insert micro-batches fold
-    * bilinearly; a retraction-bearing batch routes through the same
-    * touched-group rescan the batch refresh runs ([[
-    * rescanJoinTouched]], both side reads pruned) — only post-only
-    * `update` rows refuse (the retracted pair's join key is
-    * unrecoverable; record merges with `preImages = true`).
-    * Exactly-once under the file-source contract, same
-    * three guards as the single-table maintainer: `version > applied`
-    * filtering per side, the sentinel's `_mv_batch_id` replay guard,
-    * and CAS commits. ONE maintainer stream per view (the batch-id
-    * monotonicity contract of [[streamRefreshView]]); a batch
-    * [[refreshJoinView]] racing the maintainer CASes safely and
-    * preserves the guard. */
+    * micro-batch with [[foldJoinView]] — per side, the batch's rows
+    * past the applied version, ending at their highest version, so
+    * both "other side" terms are pinned by time travel to the batch's
+    * own window ends. Exactly-once with the three guards of
+    * [[streamRefreshView]] (`version > applied` per side, the batch-id
+    * replay guard, CAS commits) and the same one-maintainer-per-view
+    * contract; a batch [[refreshJoinView]] racing the maintainer CASes
+    * safely and preserves the guard. */
   def streamRefreshJoinView(
       spark: SparkSession,
       viewDir: String,
@@ -1790,100 +1787,26 @@ object Views {
         Snapshots.changesStream(spark, rightDir)
           .withColumn("_side", lit("R")),
         allowMissingColumns = true)
-    feed.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyJoinStreamBatch(spark, viewDir, leftDir, rightDir, joinKeys,
-          batch, batchId, upsertKeyLeft, upsertKeyRight)
-        maybeMaintain(spark, viewDir, batchId, maintainEvery, keepVersions)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-  }
-
-  private def applyJoinStreamBatch(
-      spark: SparkSession, viewDir: String,
-      leftDir: String, rightDir: String, joinKeys: Seq[String],
-      batch: DataFrame, batchId: Long,
-      upsertKeyLeft: Seq[String] = Nil,
-      upsertKeyRight: Seq[String] = Nil): Unit = {
-    batch.persist()
-    try {
-      val rowsDir = s"$viewDir/rows"
-      var attempt = 0
-      var done = false
-      while (!done && attempt < 10) {
-        val base = Snapshots.version(spark, rowsDir)
-        val mv = Snapshots.readVersion(spark, rowsDir, base)
-        val d = parseDef(mv)
-        val (aL, aR, lastBatch) = noteMeta(spark, rowsDir, base, 3)
-          .map(s => (s(0), s(1), s(2))).getOrElse(joinSentinelMeta(mv))
-        if (batchId <= lastBatch) return // replayed batch: already folded
-        val freshL = batch.filter(col("_side") === "L" &&
-          col("version") > aL)
-        val freshR = batch.filter(col("_side") === "R" &&
-          col("version") > aR)
-        val (kvL, kvR) = (windowKinds(freshL), windowKinds(freshR))
-        val kinds = kvL.keySet ++ kvR.keySet
-        val bounds = Seq(freshL, freshR).map(
-          _.agg(max("version")).head() match {
-            case r if r.isNullAt(0) => None
-            case r => Some(r.getLong(0))
-          })
-        if (bounds.forall(_.isEmpty)) return // nothing unapplied
-        val (tL, tR) = (bounds(0).getOrElse(aL), bounds(1).getOrElse(aR))
-        val lCols = Snapshots.readVersion(spark, leftDir, tL).columns.toSeq
-        val rCols = Snapshots.readVersion(spark, rightDir, tR).columns.toSeq
-        // `update` rows validated per carrying side, same contract as
-        // the batch refresh ([[upsertWindowVerified]] — recorded keys
-        // are ground truth): digestible through the rescan when the
-        // merge key pins the join keys and the side's resident group
-        // columns; refused otherwise
-        Seq((kvL, lCols, leftDir, tL, upsertKeyLeft, "left"),
-          (kvR, rCols, rightDir, tR, upsertKeyRight, "right"))
-          .foreach {
-          case (kv, cols, dir, tip, key, side) =>
-            kv.get("update").foreach(vers =>
-              upsertWindowVerified(spark, dir, vers, key,
-                (joinKeys ++ d.groupCols.filter(cols.contains)).distinct,
-                s"streaming join-view maintenance ($side side)", tip))
-        }
-        val dL = bounds(0).map(_ => freshL.select(lCols.map(col): _*))
-        val dR = bounds(1).map(_ => freshR.select(rCols.map(col): _*))
-        val aggRows = dropMeta(mv.filter(col("n_rows") > 0))
-        def commitNext(next: DataFrame): Boolean =
-          Snapshots.commitIfVersion(spark,
-            withMetaCols(spark, next, d,
-              Seq("_mv_srcl_version" -> tL, "_mv_srcr_version" -> tR,
-                "_mv_batch_id" -> batchId)),
-            rowsDir, base, statsColumns = d.groupCols,
-            notes = metaNote(tL, tR, batchId) :+
-              paramsNote(leftDir, rightDir, joinKeys)).nonEmpty
-        if (kinds.subsetOf(Set("insert"))) {
-          val deltaRows = (dL.map(f => f.join(
-            readMatching(spark, rightDir, tR, f, joinKeys), joinKeys)) ++
-            dR.map(f => readMatching(spark, leftDir, aL, f, joinKeys)
-              .join(f, joinKeys)))
-            .reduce(_ unionByName _)
-          done = commitNext(applyDeltas(aggRows,
-            deltaRows.withColumn("change_type", lit("insert")), d))
-        } else {
-          // a RETRACTION-bearing micro-batch routes through the batch
-          // refresh's touched-group rescan (the bilinear delta cannot
-          // retract pairs): aggRows reflect (aL, aR), the recompute
-          // pins the two tips at the batch's own window ends (tL, tR)
-          // — exactly-once is preserved because the commit rides the
-          // same CAS + batch-id sentinel as the delta route
-          val (next, touched) = rescanJoinTouched(spark, leftDir,
-            rightDir, joinKeys, d, aggRows, dL, dR, aL, tL, aR, tR)
-          try done = commitNext(next)
-          finally touched.unpersist()
-        }
-        if (!done) attempt += 1
-      }
-      if (!done) throw new IllegalStateException(
-        s"streaming join-view maintenance on $viewDir lost 10 races")
-    } finally batch.unpersist()
+    maintainStream(spark, viewDir, feed, checkpointDir, trigger,
+      maintainEvery, keepVersions) { (batch, batchId) =>
+      foldJoinView(spark, viewDir, leftDir, rightDir, joinKeys, 10,
+        upsertKeyLeft, upsertKeyRight, "streaming join-view maintenance") {
+        (aL, aR, lastBatch) =>
+          // the union null-fills the other side's columns into each
+          // side's rows: keep only the side's own (at its window end)
+          def side(tag: String, dir: String, a: Long) =
+            pastApplied(batch.filter(col("_side") === tag), a).map {
+              case (f, t) =>
+                val own = "change_type" +:
+                  Snapshots.readVersion(spark, dir, t).columns :+ "version"
+                (f.select(own.map(col).toIndexedSeq: _*), t)
+            }
+          if (batchId <= lastBatch) None
+          else Some((side("L", leftDir, aL), side("R", rightDir, aR),
+            batchId)).filter(w => w._1.nonEmpty || w._2.nonEmpty)
+      }.getOrElse(throw new IllegalStateException(
+        s"streaming join-view maintenance on $viewDir lost 10 races"))
+    }
   }
 
   // ---------- view-table retention ----------
@@ -1946,69 +1869,5 @@ object Views {
     if (dir == viewDir) Map("view" -> one(viewDir))
     else Map("rows" -> one(dir),
       "params" -> one(s"$viewDir/params"))
-  }
-
-  private def applyStreamBatch(spark: SparkSession, viewDir: String,
-      srcDir: String, batch: DataFrame, batchId: Long,
-      upsertKey: Seq[String] = Nil): Unit = {
-    batch.persist()
-    try {
-      var attempt = 0
-      var done = false
-      while (!done && attempt < 10) {
-        val base = Snapshots.version(spark, viewDir)
-        val mv = Snapshots.readVersion(spark, viewDir, base)
-        val d = parseDef(mv.drop(MetaCols: _*))
-        val (applied, lastBatch) = noteMeta(spark, viewDir, base, 2)
-          .map(s => (s(0), s(1))).getOrElse(sentinelMeta(mv))
-        if (batchId <= lastBatch) return // replayed batch: already folded
-        val fresh = batch.filter(col("version") > applied)
-        val maxV = fresh.agg(max("version")).head()
-        if (maxV.isNullAt(0)) return // nothing unapplied in this batch
-        val tip = maxV.getLong(0)
-        val aggRows = mv.filter(col("n_rows") > 0).drop(MetaCols: _*)
-        // the same routing as batch refreshView: delta-invertible
-        // views (and insert-only windows of rescan-agg views) fold as
-        // pure deltas; a RETRACTION-bearing micro-batch on a
-        // min/max/HLL view routes through the touched-group rescan
-        // with the source tip pinned at the batch's own window end —
-        // exactly-once is preserved because the commit rides the same
-        // CAS + batch-id sentinel either way (mirrors what the JOIN
-        // maintainer's applyJoinStreamBatch does). Only post-only
-        // `update` rows refuse (the row's previous group is genuinely
-        // unrecoverable — record merges with preImages = true).
-        val kindVers =
-          if (d.hasRescanAggs || upsertKey.nonEmpty) windowKinds(fresh)
-          else Map.empty[String, Seq[Long]]
-        val kinds = kindVers.keySet
-        val next =
-          if (kinds.contains("update")) {
-            // post-only `update` rows digest under the declared
-            // upsert contract via the same rescan-at-window-end the
-            // delete route runs ([[upsertWindowVerified]] — recorded
-            // keys are ground truth); undeclared or underdetermined
-            // feeds refuse exactly as before
-            upsertWindowVerified(spark, srcDir, kindVers("update"),
-              upsertKey, d.groupCols, "streaming view maintenance", tip)
-            rescanTouched(aggRows, fresh.drop("version"),
-              readMatching(spark, srcDir, tip, fresh, d.groupCols,
-                nullSafe = true), d)
-          } else if (!d.hasRescanAggs)
-            applyDeltas(aggRows, fresh.drop("version"), d)
-          else if (kinds.subsetOf(Set("insert")))
-            applyDeltas(aggRows, fresh.drop("version"), d)
-          else
-            rescanTouched(aggRows, fresh.drop("version"),
-              readMatching(spark, srcDir, tip, fresh, d.groupCols,
-                nullSafe = true), d)
-        done = Snapshots.commitIfVersion(spark,
-          withMeta(spark, next, d, math.max(applied, tip), batchId),
-          viewDir, base, statsColumns = d.groupCols,
-          notes = metaNote(math.max(applied, tip), batchId)).nonEmpty
-        if (!done) attempt += 1
-      }
-      if (!done) throw new IllegalStateException(
-        s"streaming view maintenance on $viewDir lost 10 optimistic races")
-    } finally batch.unpersist()
   }
 }

@@ -1691,4 +1691,21 @@ class SnapshotsSpec extends SparkSpec {
     // no sidecar of this sequence may move onto the Spark path
     assert((commit, merge, point) == (2, 10, 1))
   }
+
+  test("job counts: plain commit, CAS commit with stats and a change feed") {
+    val sc = spark.sparkContext
+    def df = Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "grp", "v")
+    val dir = Files.createTempDirectory("graft-snap-cjobs").toString
+    val plain = org.apache.spark.TestJobs.count(sc)(
+      Snapshots.commit(spark, df, dir))
+    var v = Option.empty[Long]
+    val cas = org.apache.spark.TestJobs.count(sc) {
+      v = Snapshots.commitIfVersion(spark, df, dir, 1L,
+        statsColumns = Seq("id"),
+        changes = Some(df.withColumn("change_type", lit("insert"))))
+    }
+    assert(v === Some(2L))
+    // both stay driver-side: a small local frame writes no Spark job
+    assert((plain, cas) === ((0, 0)))
+  }
 }

@@ -255,8 +255,13 @@ class ViewsModelSpec extends SparkSpec {
       var rm = Map(0L -> ((0L, 5L)))
       Snapshots.commit(spark, lDf(lm), l)
       Snapshots.commit(spark, rDf(rm), r)
-      Views.createJoinView(spark, l, r, v, Seq("id"), Seq("grp"),
-        sumCols = Seq("v"), minCols = Seq("v"), maxCols = Seq("v"))
+      // the batch ≡ stream law: a stream-maintained twin of the view,
+      // drained at every refresh point, must track the model too
+      val sv = Files.createTempDirectory("graft-jvm-sv").toString
+      val ck = Files.createTempDirectory("graft-jvm-ck").toString
+      Seq(v, sv).foreach(Views.createJoinView(spark, l, r, _, Seq("id"),
+        Seq("grp"), sumCols = Seq("v"), minCols = Seq("v"),
+        maxCols = Seq("v")))
       var ok = true
       (ops :+ JRefreshOp).foreach {
         case MergeLeftOp(rows) =>
@@ -285,14 +290,17 @@ class ViewsModelSpec extends SparkSpec {
         case JRefreshOp =>
           Views.refreshJoinView(spark, v,
             upsertKeyRight = Seq("rid", "id"))
-          val got = Views.readJoinView(spark, v).collect().map { x =>
-            x.getString(x.fieldIndex("grp")) ->
-              ((x.getLong(x.fieldIndex("n_rows")),
-                x.getLong(x.fieldIndex("sum_v")),
-                x.getLong(x.fieldIndex("min_v")),
-                x.getLong(x.fieldIndex("max_v"))))
-          }.toMap
-          ok = ok && got == jRollup(lm, rm)
+          Views.streamRefreshJoinView(spark, sv, ck,
+            upsertKeyRight = Seq("rid", "id")).awaitTermination()
+          def got(dir: String) = Views.readJoinView(spark, dir).collect()
+            .map { x =>
+              x.getString(x.fieldIndex("grp")) ->
+                ((x.getLong(x.fieldIndex("n_rows")),
+                  x.getLong(x.fieldIndex("sum_v")),
+                  x.getLong(x.fieldIndex("min_v")),
+                  x.getLong(x.fieldIndex("max_v"))))
+            }.toMap
+          ok = ok && got(v) == jRollup(lm, rm) && got(sv) == jRollup(lm, rm)
       }
       ok
     }
@@ -303,28 +311,45 @@ class ViewsModelSpec extends SparkSpec {
 
   test("property: both view strategies track the model through any op sequence") {
     val prop = Prop.forAll(Gen.listOfN(7, genOp)) { ops =>
-      val src = Files.createTempDirectory("graft-vm-src").toString
-      val dv = Files.createTempDirectory("graft-vm-delta").toString
-      val mm = Files.createTempDirectory("graft-vm-minmax").toString
-      val qv = Files.createTempDirectory("graft-vm-quantile").toString
-      val tv = Files.createTempDirectory("graft-vm-topk").toString
+      def tmp(name: String) = Files.createTempDirectory(name).toString
+      val src = tmp("graft-vm-src")
       var model = Map(0L -> 0L)
       Snapshots.commit(spark, toDf(model), src)
-      // the delta view also carries VARIANCE state (sum + exact
-      // decimal sum-of-squares) — delta-invertible like its sums —
-      // and the NULL-bearing measure w, whose served avg_ must divide
-      // by the maintained non-null count cnt_w (SQL AVG)
-      Views.createView(spark, src, dv, Seq("grp"),
-        sumCols = Seq("v", "w"), varCols = Seq("v"))
-      Views.createView(spark, src, mm, Seq("grp"), sumCols = Seq("v"),
-        minCols = Seq("v"), maxCols = Seq("v"))
-      // the quantile view is PURE DELTA like dv — bucket counts
-      // subtract exactly, so deletes never trigger a rescan
-      Views.createView(spark, src, qv, Seq("grp"),
-        quantileCols = Seq("v"))
-      // the heavy-hitter view is PURE DELTA too — count-min cell
-      // counts subtract exactly
-      Views.createView(spark, src, tv, Seq("grp"), topkCols = Seq("v"))
+      // (delta, minmax, quantile, topk) views; the batch ≡ stream law
+      // keeps a stream-maintained twin of each, drained at every
+      // refresh point, which must track the model too
+      def create(tag: String): Seq[String] = {
+        val Seq(dv, mm, qv, tv) = Seq("delta", "minmax", "quantile", "topk")
+          .map(k => tmp(s"graft-vm-$tag$k"))
+        // the delta view also carries VARIANCE state (sum + exact
+        // decimal sum-of-squares) — delta-invertible like its sums —
+        // and the NULL-bearing measure w, whose served avg_ must divide
+        // by the maintained non-null count cnt_w (SQL AVG)
+        Views.createView(spark, src, dv, Seq("grp"),
+          sumCols = Seq("v", "w"), varCols = Seq("v"))
+        Views.createView(spark, src, mm, Seq("grp"), sumCols = Seq("v"),
+          minCols = Seq("v"), maxCols = Seq("v"))
+        // the quantile view is PURE DELTA like dv — bucket counts
+        // subtract exactly, so deletes never trigger a rescan
+        Views.createView(spark, src, qv, Seq("grp"),
+          quantileCols = Seq("v"))
+        // the heavy-hitter view is PURE DELTA too — count-min cell
+        // counts subtract exactly
+        Views.createView(spark, src, tv, Seq("grp"), topkCols = Seq("v"))
+        Seq(dv, mm, qv, tv)
+      }
+      val batchViews = create("")
+      val streamViews = create("stream-").map(_ -> tmp("graft-vm-ck"))
+      def tracks(views: Seq[String]): Boolean = {
+        val Seq(dv, mm, qv, tv) = views
+        val want = rollup(model)
+        viewState(dv, minmax = false) == zeroMinMax(want) &&
+          viewState(mm, minmax = true) == want &&
+          quantileState(qv) == quantileRollup(model) &&
+          varState(dv) == varRollup(model) &&
+          avgState(dv) == avgRollup(model) &&
+          topkLaw(tv, model)
+      }
       var ok = true
       (ops :+ RefreshOp).foreach {
         case MergeOp(rows) =>
@@ -349,17 +374,13 @@ class ViewsModelSpec extends SparkSpec {
         case RefreshOp =>
           // the declared key makes post-only upsert windows digest;
           // windows without update rows route exactly as before
-          Views.refreshView(spark, src, dv, upsertKey = Seq("id", "grp"))
-          Views.refreshView(spark, src, mm, upsertKey = Seq("id", "grp"))
-          Views.refreshView(spark, src, qv, upsertKey = Seq("id", "grp"))
-          Views.refreshView(spark, src, tv, upsertKey = Seq("id", "grp"))
-          val want = rollup(model)
-          ok = ok && viewState(dv, minmax = false) == zeroMinMax(want) &&
-            viewState(mm, minmax = true) == want &&
-            quantileState(qv) == quantileRollup(model) &&
-            varState(dv) == varRollup(model) &&
-            avgState(dv) == avgRollup(model) &&
-            topkLaw(tv, model)
+          batchViews.foreach(
+            Views.refreshView(spark, src, _, upsertKey = Seq("id", "grp")))
+          streamViews.foreach { case (sv, ck) =>
+            Views.streamRefreshView(spark, src, sv, ck,
+              upsertKey = Seq("id", "grp")).awaitTermination()
+          }
+          ok = ok && tracks(batchViews) && tracks(streamViews.map(_._1))
       }
       ok
     }

@@ -1217,4 +1217,58 @@ class ViewsSpec extends SparkSpec {
         x.getLong(x.fieldIndex("sum_v"))).toMap
     assert(jgot === Map("a" -> 99L, "b" -> 5L))
   }
+
+  test("job counts: refresh and stream-drain routes of both view kinds") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def jobs(body: => Unit): Int = org.apache.spark.TestJobs.count(sc)(body)
+    def drain(q: => org.apache.spark.sql.streaming.StreamingQuery): Int =
+      org.apache.spark.TestJobs.countStream(sc)(q)
+    // single-table: a sum view on the delta route, a min/max view on
+    // the rescan route, and a min/max stream twin draining both windows
+    val src = tmp("jcsrc"); val dv = tmp("jcdv"); val mm = tmp("jcmm")
+    val smm = tmp("jcsmm")
+    Snapshots.commit(spark, rows((1, "a", 10), (2, "a", 99), (3, "b", 50)),
+      src, statsColumns = Seq("grp"))
+    Views.createView(spark, src, dv, Seq("grp"), sumCols = Seq("v"))
+    Views.createView(spark, src, mm, Seq("grp"), sumCols = Seq("v"),
+      minCols = Seq("v"), maxCols = Seq("v"))
+    Views.createView(spark, src, smm, Seq("grp"), sumCols = Seq("v"),
+      minCols = Seq("v"), maxCols = Seq("v"))
+    Snapshots.merge(spark, src, rows((4, "b", 7)), Seq("id"),
+      recordChanges = true, preImages = true)
+    val delta = jobs(Views.refreshView(spark, src, dv))
+    Views.refreshView(spark, src, mm)
+    Snapshots.delete(spark, src, col("id") === 2, recordChanges = true)
+    val rescan = jobs(Views.refreshView(spark, src, mm))
+    val stream = drain(
+      Views.streamRefreshView(spark, src, smm, tmp("jcck")))
+    assert(Views.readView(spark, smm).collect().toSet ===
+      Views.readView(spark, mm).collect().toSet)
+    // join: an insert-only window (bilinear delta), then a delete
+    // (rescan), and a stream twin draining both sides' windows
+    val l = tmp("jcl"); val r = tmp("jcr")
+    val jv = tmp("jcjv"); val sjv = tmp("jcsjv")
+    def lrows(p: (Long, String)*) = p.toSeq.toDF("id", "grp")
+    def rrows(p: (Long, Long)*) = p.toSeq.toDF("id", "v")
+    Snapshots.commit(spark, lrows((1, "a"), (2, "b")), l)
+    Snapshots.commit(spark, rrows((1, 10), (1, 20), (2, 5)), r,
+      statsColumns = Seq("id"))
+    Views.createJoinView(spark, l, r, jv, Seq("id"), Seq("grp"),
+      sumCols = Seq("v"), maxCols = Seq("v"))
+    Views.createJoinView(spark, l, r, sjv, Seq("id"), Seq("grp"),
+      sumCols = Seq("v"), maxCols = Seq("v"))
+    Snapshots.merge(spark, l, lrows((3, "a")), Seq("id"),
+      recordChanges = true)
+    Snapshots.merge(spark, r, rrows((3, 7)), Seq("id"),
+      recordChanges = true)
+    val jInsert = jobs(Views.refreshJoinView(spark, jv))
+    Snapshots.delete(spark, r, col("id") === 1, recordChanges = true)
+    val jRescan = jobs(Views.refreshJoinView(spark, jv))
+    val jStream = drain(Views.streamRefreshJoinView(spark, sjv, tmp("jcjck")))
+    assert(Views.readJoinView(spark, sjv).collect().toSet ===
+      Views.readJoinView(spark, jv).collect().toSet)
+    assert((delta, rescan, jInsert, jRescan, stream, jStream) ===
+      ((4, 3, 6, 9, 11, 22)))
+  }
 }
